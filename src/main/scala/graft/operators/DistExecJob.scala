@@ -3,7 +3,7 @@ package graft.operators
 import java.io.{ByteArrayInputStream, IOException, OutputStream}
 
 import graft.exec.{CommandLine, ExitPolicy, ProcessRunner}
-import graft.fs.{FileEntry, Manifest}
+import graft.fs.{DstFileSystem, FileEntry, Manifest}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -52,7 +52,11 @@ final case class DistExecOptions(
   *  - streams the source file through the child process (never
   *    materializes it in memory — no `binaryFile` 2 GB limit);
   *  - distributed listing available for wide trees
-  *    ([[Manifest.listDistributed]]).
+  *    ([[Manifest.listDistributed]]);
+  *  - a local destination is written through
+  *    [[graft.fs.DirectModeLocalFileSystem]], not the stock local
+  *    filesystem, because without libhadoop the stock one forks a
+  *    `chmod` process for every file and directory it creates.
   */
 object DistExecJob {
 
@@ -156,9 +160,8 @@ object DistExecJob {
     // million-directory tree never funnels through the driver.
     if (!special) dstFs.mkdirs(dstPath)
     dirs.foreachPartition { (it: Iterator[FileEntry]) =>
-      val c = Manifest.restoreConf(confEntriesForDirs)
       val root = new Path(dstStrForDirs)
-      val fs = root.getFileSystem(c)
+      val fs = DstFileSystem.taskPrivate(dstStrForDirs, Manifest.restoreConf(confEntriesForDirs))
       it.foreach(d => fs.mkdirs(new Path(root, d.relativeDst)))
     }
 
@@ -191,19 +194,7 @@ object DistExecJob {
         case null => "local"
         case tc   => s"${tc.stageAttemptNumber()}-${tc.taskAttemptId()}"
       }
-      // Task-private dst FileSystem: checksum writing is disabled for the
-      // mirrored tree (no .crc sidecars), and that flag must NOT leak into
-      // the JVM-wide FileSystem.get cache shared by every other user of
-      // this filesystem on the executor — so newInstance, closed with the
-      // task.
-      val dstFsTask = FileSystem.newInstance(new Path(dstStr).toUri, taskConf)
-      dstFsTask.setWriteChecksum(false)
-      TaskContext.get() match {
-        case null => ()
-        case tc => tc.addTaskCompletionListener[Unit] { _ =>
-          try dstFsTask.close() catch { case _: IOException => () }
-        }
-      }
+      val dstFsTask = DstFileSystem.taskPrivate(dstStr, taskConf)
       it.map(e => executeOne(taskConf, dstFsTask, e, dstStr, tmpRootStr, attempt, cmd, redirect, accept, isSpecial))
     }
 
@@ -254,18 +245,8 @@ object DistExecJob {
     status.filter(s => s.ok && s.bytesOut > 0).map(_.relativeDst)
       .repartition(1)
       .mapPartitions { it =>
-        val c = Manifest.restoreConf(confEntries)
         val root = new Path(dstStr)
-        // Task-private instance: no .crc sidecar for the merged file, and
-        // no mutation of the executor's cached FileSystem.
-        val taskFs = FileSystem.newInstance(root.toUri, c)
-        taskFs.setWriteChecksum(false)
-        TaskContext.get() match {
-          case null => ()
-          case tc => tc.addTaskCompletionListener[Unit] { _ =>
-            try taskFs.close() catch { case _: IOException => () }
-          }
-        }
+        val taskFs = DstFileSystem.taskPrivate(dstStr, Manifest.restoreConf(confEntries))
         val attempt = TaskContext.get() match {
           case null => "local"
           case tc   => s"${tc.stageAttemptNumber()}-${tc.taskAttemptId()}"
@@ -328,10 +309,8 @@ object DistExecJob {
   private final class LazyOut(fs: FileSystem, path: Path) extends OutputStream {
     private var out: OutputStream = _
     private def ensure(): OutputStream = {
-      if (out == null) {
-        fs.mkdirs(path.getParent)
-        out = fs.create(path, true)
-      }
+      // create makes the missing parents itself
+      if (out == null) out = fs.create(path, true)
       out
     }
     override def write(b: Int): Unit = ensure().write(b)
@@ -368,7 +347,12 @@ object DistExecJob {
       val err = new LazyOut(dstFs, tmpErr)
       val res =
         try ProcessRunner.run(argv, in, out, err, redirectErrorToOut)
-        finally { try in.close() catch { case _: IOException => () }; out.close(); err.close() }
+        finally {
+          try in.close() catch { case _: IOException => () }
+          // err closes even when out's close throws (else its stream and
+          // tmp file handle leak); the throw still fails the file
+          try out.close() finally err.close()
+        }
       if (!ExitPolicy.accepts(argv, res.exitCode, acceptExitCodes))
         throw new IOException(s"exit ${res.exitCode} from '$command' on ${e.path}")
       // Atomic publish: delete-existing + rename tmp→dst, per stream

@@ -1,6 +1,9 @@
 package graft.operators
 
+import java.io.IOException
 import java.nio.file.{Files, Path => JPath}
+
+import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
 import org.scalatest.funsuite.AnyFunSuite
@@ -21,6 +24,36 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
     val d = Files.createTempDirectory("graft-exec-dst")
     Files.delete(d)
     d
+  }
+
+  // unix:mode, not Hadoop getFileStatus: without libhadoop that forks `ls`
+  private def mode(p: JPath): Int = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+
+  private def walk(root: JPath): List[JPath] = {
+    val s = Files.walk(root)
+    try s.iterator().asScala.toList finally s.close()
+  }
+
+  /** Run `cat` plus a stderr line over [[mkTree]] and check every entry
+    * under dst (outputs, `.stderr` sidecars, mirrored dirs) has the
+    * stock-Hadoop mode for the session's umask, and no `.crc` exists.
+    */
+  private def assertModes(fileMode: Int, dirMode: Int): Unit = {
+    val src = mkTree()
+    val dst = tmpDst()
+    val rows = DistExecJob.run(spark, Seq(src.toString), dst.toString,
+      "sh -c 'cat; echo oops >&2'").collect()
+    assert(rows.length == 3 && rows.forall(_.ok))
+    // dst itself is made on the driver through the cached FileSystem
+    val entries = walk(dst).filter(_ != dst)
+    val names = entries.map(p => dst.relativize(p).toString).toSet
+    assert(Set("a.txt", "a.txt.stderr", "sub", "sub/c.txt", "sub/c.txt.stderr", "emptydir")
+      .subsetOf(names), names)
+    assert(!names.exists(_.endsWith(".crc")), names)
+    entries.foreach { p =>
+      val want = if (Files.isDirectory(p)) dirMode else fileMode
+      assert(mode(p) == want, f"${dst.relativize(p)}: mode ${mode(p)}%o, want $want%o")
+    }
   }
 
   test("e2e cat: mirrored tree with identical content (README primary example)") {
@@ -226,6 +259,58 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
     // spot-check content edges rather than loading the file whole
     val head = new String(java.nio.file.Files.newInputStream(out).readNBytes(64))
     assert(head == line)
+  }
+
+  test("modes match stock Hadoop under the default umask: 0644 files, 0755 dirs, no .crc") {
+    val umask = org.apache.hadoop.fs.permission.FsPermission.getUMask(spark.sparkContext.hadoopConfiguration)
+    assert(umask.toShort == 0x12, umask) // 022
+    assertModes(fileMode = 0x1a4, dirMode = 0x1ed) // 0644, 0755
+  }
+
+  test("modes follow fs.permissions.umask-mode=077: 0600 files, 0700 dirs") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    val key = "fs.permissions.umask-mode"
+    val old = hc.get(key)
+    hc.set(key, "077")
+    try assertModes(fileMode = 0x180, dirMode = 0x1c0) // 0600, 0700
+    finally if (old == null) hc.unset(key) else hc.set(key, old)
+  }
+
+  test("stdout close failure: FAIL row, stderr stream still closed, no tmp left") {
+    import org.apache.hadoop.conf.Configuration
+    import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, FilterFileSystem, Path}
+    import org.apache.hadoop.fs.permission.FsPermission
+    import org.apache.hadoop.util.Progressable
+    val conf = new Configuration()
+    val closed = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    // every created stream records its close; the stdout one then throws
+    val failing = new FilterFileSystem(FileSystem.getLocal(conf).getRaw) {
+      override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+          bufferSize: Int, replication: Short, blockSize: Long,
+          progress: Progressable): FSDataOutputStream = {
+        val inner = super.create(f, permission, overwrite, bufferSize, replication, blockSize, progress)
+        new FSDataOutputStream(inner, null) {
+          override def close(): Unit = {
+            super.close()
+            closed.add(f.getName)
+            if (!f.getName.endsWith(".stderr")) throw new IOException("injected close failure")
+          }
+        }
+      }
+    }
+    val src = Files.createTempDirectory("graft-close-src")
+    Files.writeString(src.resolve("f.txt"), "payload\n")
+    val dst = tmpDst()
+    Files.createDirectories(dst)
+    val entry = graft.fs.FileEntry(src.resolve("f.txt").toString,
+      src.toString, "f.txt", 8L, isDir = false, 0L)
+    val tmpRoot = dst.resolve("_distexec_tmp_close")
+    val st = DistExecJob.executeOne(conf, failing, entry, dst.toString, tmpRoot.toString,
+      "0-1", "sh -c 'cat; echo oops >&2'", redirectErrorToOut = false,
+      acceptExitCodes = Set(0), special = false)
+    assert(!st.ok && st.error.contains("injected close failure"), st)
+    assert(closed.asScala == Set("f.txt", "f.txt.stderr"), s"closed: $closed")
+    assert(walk(dst).forall(Files.isDirectory(_)), s"files left: ${walk(dst)}")
   }
 
   test("speculation race: two attempts of one file — last rename wins, no partial output") {
