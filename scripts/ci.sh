@@ -14,9 +14,13 @@ for sf in 0.001 0.01 $([ "${1:-}" = "--quick" ] || echo 0.1); do
   python3 scripts/selfcheck.py "/tmp/ci_verify_$sf" "/root/testdata/sf$sf" | tail -2
 done
 
+echo "=== perfbench harness self-tests ==="
+python3 perfbench/run.py --test
+
 if [ "${1:-}" != "--quick" ]; then
   echo "=== bench sf0.1 ==="
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  # Bench reads sf0.1 by default (SPARK_GRAFT_SF_DIR unset)
+  SPARK_GRAFT_CPUS="$(nproc)" \
     sbt -batch 'runMain graft.Bench' 2>&1 | grep -E '\{"metric"'
 fi
 echo "=== CI done ==="

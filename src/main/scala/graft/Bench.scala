@@ -4,15 +4,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Benchmark main (driver contract): runs every declared query on
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line with per-query seconds.
-  *
-  * TWO ARMS as of r15: the HEADLINE numbers ride the bucketed fact
-  * backbone (sources.Bucketed — the standing 100 TB layout rule; the
-  * one-time write cost is stamped as `bucket_build_sec`, never timed
-  * into a pass), and a RAW arm re-times the layout-affected queries on
-  * the unbucketed parquet the DuckDB comparator reads (`raw_arm` in the
-  * JSON, cohort discovered from the plans via Bucketed.wasTouched).
-  * SPARK_GRAFT_BUCKETED=0 forces a raw-only headline;
-  * SPARK_GRAFT_RAW_ARM=0 skips the comparison arm.
+  * Every query reads the raw parquet files under that dir — the same
+  * bytes the DuckDB comparator and the Verify oracle read.
   *
   * Each query is run once untimed (JIT, codegen compile, parquet footer
   * caches — Spark warmup that a long-lived cluster amortizes away) and
@@ -353,17 +346,6 @@ object Bench {
 
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
 
-    // Bucketed fact backbone (sources.Bucketed): DEFAULT ON for the
-    // headline arm as of r15 — the layout is the standing 100 TB rule
-    // (every repeatedly-joined fact pair ships bucketed on its join
-    // key; r14 verdict item 1), so the engine's official number rides
-    // it. The one-time write cost is stamped separately, and a RAW
-    // comparison arm re-times the affected queries on the same raw
-    // parquet DuckDB reads (below). SPARK_GRAFT_BUCKETED=0 forces the
-    // old raw-only headline for layout A/Bs.
-    val bucketed = sys.env.get("SPARK_GRAFT_BUCKETED")
-      .map(v => v == "1" || v.equalsIgnoreCase("true")).getOrElse(true)
-
     // Contention guard (r4/r5 verdicts: two rounds of artifacts captured
     // at loadavg > 1 made the perf evidence untrustworthy). If the box
     // is loaded at launch, WAIT for it to go idle — up to
@@ -409,23 +391,7 @@ object Bench {
       sys.exit(2)
     }
 
-    // load0 stamped BEFORE the backbone build: the build is this JVM's
-    // own work, and its loadavg wake would otherwise trip
-    // finalLoadWarning's load0 arm on every run while external_cpu
-    // correctly measures the neighbors at 0 — load0's job is the BOX
-    // state a neighbor left, not our own write traffic.
     val load0 = loadavg()
-    // Backbone build AFTER the idle-wait (its own Spark jobs raise
-    // loadavg; building first would make the guard wait out our own
-    // write) and BEFORE the wall/warmup window, so the one-time cost
-    // never contaminates a timed pass.
-    val bucketBuildSec = if (bucketed) {
-      spark.conf.set(graft.sources.Bucketed.FlagConf, "true")
-      val s = graft.sources.Bucketed.ensureBackbone(spark, sfDir)
-      System.err.println(f"[bench] bucketed backbone built in $s%.2f s")
-      s
-    } else 0.0
-
     val wall0 = System.nanoTime()
 
     // Local-iteration filter: SPARK_GRAFT_ONLY=c15_dedup_groups,c12 runs
@@ -434,16 +400,9 @@ object Bench {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSeq)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.exists(n.startsWith)))
-    // Warmup doubles as the raw-arm cohort discovery: a query belongs to
-    // the raw comparison arm iff its construction resolved a backbone
-    // table (recorded by Bucketed.wasTouched on the driver thread) —
-    // the layout cannot have changed any other query's plan.
-    val affected = scala.collection.mutable.LinkedHashSet[String]()
     names.foreach { n => // warmup pass, untimed
-      graft.sources.Bucketed.resetTouched()
       try SparkEntry.queries(n)(spark, sfDir).collect()
       catch { case _: Throwable => () }
-      if (graft.sources.Bucketed.wasTouched) affected += n
     }
     // External-CPU window opens AFTER the untimed warmup: a neighbor
     // active only during warmup but idle during every timed pass would
@@ -477,33 +436,6 @@ object Bench {
         timed(n) = timed(n) :+ t
       }
     }
-    // RAW comparison arm (r15): the headline arm above rode the bucketed
-    // backbone; DuckDB reads raw parquet, so comparator fairness wants
-    // the affected queries re-timed on the identical raw files. Same
-    // pass-major median-of-K protocol, same session (caches hot), flag
-    // off for the duration. SPARK_GRAFT_RAW_ARM=0 skips it.
-    val rawArm = bucketed && affected.nonEmpty &&
-      !sys.env.get("SPARK_GRAFT_RAW_ARM").contains("0")
-    val rawTimed = scala.collection.mutable.Map[String, Vector[Double]]()
-      .withDefaultValue(Vector.empty)
-    if (rawArm) {
-      spark.conf.set(graft.sources.Bucketed.FlagConf, "false")
-      try {
-        affected.foreach { n => // raw warmup (plans differ from bucketed)
-          try SparkEntry.queries(n)(spark, sfDir).collect()
-          catch { case _: Throwable => () }
-        }
-        (1 to passes).foreach { _ =>
-          affected.foreach { n =>
-            val t0 = System.nanoTime()
-            val t =
-              try { SparkEntry.queries(n)(spark, sfDir).collect(); (System.nanoTime() - t0) / 1e9 }
-              catch { case _: Throwable => -1.0 }
-            rawTimed(n) = rawTimed(n) :+ t
-          }
-        }
-      } finally spark.conf.set(graft.sources.Bucketed.FlagConf, "true")
-    }
     // External-CPU window closes HERE — after the timed passes, before
     // the exec legs, whose spawned `cat` children are not in this JVM's
     // process CPU and would read as fake "external" load.
@@ -528,32 +460,6 @@ object Bench {
     val raw = results.map { case (k, _, ts) => s""""$k":[${ts.mkString(",")}]""" }
       .mkString("{", ",", "}")
     val total = results.collect { case (_, v, _) if v >= 0 => v }.sum
-    // Raw-arm stamp: per-query medians + passes, the arm's total, and
-    // the SAME cohort's bucketed total from the headline arm so the
-    // layout delta reads off one object.
-    val (rawArmJson, rawArmCompact) = if (!rawArm) ("", "") else {
-      val rms = affected.toSeq.map { n =>
-        val ts = rawTimed(n)
-        (n, if (ts.isEmpty || ts.exists(_ < 0)) -1.0 else median(ts), ts)
-      }
-      val q = rms.map { case (k, v, _) => s""""$k":${fmt(v, 3)}""" }
-        .mkString("{", ",", "}")
-      val p = rms.map { case (k, _, ts) => s""""$k":[${ts.mkString(",")}]""" }
-        .mkString("{", ",", "}")
-      val rawTotal = rms.collect { case (_, v, _) if v >= 0 => v }.sum
-      val bktTotal = results.collect {
-        case (k, v, _) if affected.contains(k) && v >= 0 => v }.sum
-      (s""","raw_arm":{"note":"backbone-affected queries re-timed on raw parquet""" +
-        s""" (the DuckDB comparator's layout), same pass-major median-of-$passes""" +
-        s""" protocol in the same session; the headline queries above rode the""" +
-        s""" bucketed backbone","cohort_rule":"queries whose construction""" +
-        s""" resolved a backbone table (Bucketed.wasTouched)","queries":$q,""" +
-        s""""pass_times":$p,"raw_total_sec":${fmt(rawTotal, 3)},""" +
-        s""""bucketed_total_sec_matched":${fmt(bktTotal, 3)}}""",
-       s""","raw_arm_total":${fmt(rawTotal, 3)},""" +
-         s""""raw_arm_bucketed_matched":${fmt(bktTotal, 3)},""" +
-         s""""raw_arm_n":${rms.size}""")
-    }
     // The R10 exec scenario (skippable for query-only iteration; 0 files
     // disables). Runs AFTER the query passes so process fan-out noise
     // can't contaminate the query medians.
@@ -577,7 +483,6 @@ object Bench {
       load0, extFrac)
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""aqe":$aqe,"shuffle_partitions":$shuffle,""" +
-      s""""bucketed":$bucketed,"bucket_build_sec":${fmt(bucketBuildSec, 2)}$rawArmJson,""" +
       s""""extra_conf":"${sys.env.getOrElse("SPARK_GRAFT_CONF", "")}",""" +
       s""""passes":$passes,"pass_times":$raw,"loadavg_start":"$load0",""" +
       s""""loadavg_end":"$load1","loadavg_at_launch":"$loadAtLaunch",""" +
@@ -600,9 +505,7 @@ object Bench {
     // sets showSuccess/showTiming false so sbt appends nothing after it.
     println(summaryLine(results.map { case (k, v, _) => (k, v) }, total,
       sfDir, passes, loadWarningOut, loadAtLaunch, load0, load1, extFrac,
-      iowFrac, wallSec,
-      s""","bucketed":$bucketed$rawArmCompact""" + ioStateJson + execJson +
-        execBytesJson,
+      iowFrac, wallSec, ioStateJson + execJson + execBytesJson,
       outFile.toString))
     System.out.flush()
   }

@@ -8,9 +8,7 @@ import org.apache.spark.sql.SparkSession
   * Mirrors graft.Bench's session knobs so the dumped plan is the plan
   * the bench actually times: shuffle partitions and AQE derive from the
   * input size (Tuning) unless SPARK_GRAFT_SHUFFLE / SPARK_GRAFT_AQE pin
-  * them, SPARK_GRAFT_CPUS sets the master, and SPARK_GRAFT_BUCKETED=1
-  * builds + enables the bucketed fact backbone before planning (the
-  * bench's headline arm layout).
+  * them, and SPARK_GRAFT_CPUS sets the master.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -34,12 +32,6 @@ object Explain {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val bucketed = sys.env.get("SPARK_GRAFT_BUCKETED")
-      .exists(v => v == "1" || v.equalsIgnoreCase("true"))
-    if (bucketed) {
-      spark.conf.set(graft.sources.Bucketed.FlagConf, "true")
-      graft.sources.Bucketed.ensureBackbone(spark, sfDir)
-    }
     names.foreach { n =>
       println(s"\n========== $n ==========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

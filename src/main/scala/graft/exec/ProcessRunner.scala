@@ -106,7 +106,7 @@ object ProcessRunner {
   }
 }
 
-/** Exit-code acceptance policy, including the reference's "grep
+/** Exit-code acceptance policy: exit 0, plus the reference's "grep
   * exception": exit 1 is success iff argv(0) FULLY matches one of the
   * grep family names — so `/bin/grep` does NOT qualify (reference:
   * Executor.java:33-35,50-51, `String.matches` = full match).
@@ -114,9 +114,8 @@ object ProcessRunner {
 object ExitPolicy {
   private val GrepLike = "grep|egrep|fgrep|zgrep|zegrep|zfgrep".r
 
-  def accepts(argv: Seq[String], exitCode: Int, acceptExitCodes: Set[Int] = Set(0)): Boolean =
-    acceptExitCodes.contains(exitCode) ||
-      (exitCode == 1 && argv.nonEmpty && GrepLike.matches(argv.head))
+  def accepts(argv: Seq[String], exitCode: Int): Boolean =
+    exitCode == 0 || (exitCode == 1 && argv.nonEmpty && GrepLike.matches(argv.head))
 }
 
 /** One execution: tokenize the command line, run it, apply the exit-code
@@ -129,11 +128,10 @@ object Executor {
       stdin: InputStream,
       stdout: OutputStream,
       stderr: OutputStream,
-      redirectErrorToOut: Boolean = false,
-      acceptExitCodes: Set[Int] = Set(0)): ExecResult = {
+      redirectErrorToOut: Boolean = false): ExecResult = {
     val argv = CommandLine.translate(commandLine)
     val res = ProcessRunner.run(argv, stdin, stdout, stderr, redirectErrorToOut)
-    if (!ExitPolicy.accepts(argv, res.exitCode, acceptExitCodes))
+    if (!ExitPolicy.accepts(argv, res.exitCode))
       throw new IOException(
         s"Process '${argv.mkString(" ")}' exited with status ${res.exitCode}")
     res

@@ -2,7 +2,7 @@ package graft.operators
 
 import java.io.{ByteArrayInputStream, IOException, OutputStream}
 
-import graft.exec.{CommandLine, ExitPolicy, ProcessRunner}
+import graft.exec.{CommandLine, Executor}
 import graft.fs.{DstFileSystem, FileEntry, Manifest}
 
 import org.apache.hadoop.conf.Configuration
@@ -26,13 +26,10 @@ final case class ExecStatus(
 final case class ExecCounters(executed: Long, failed: Long, bytesExecuted: Long, bytesWritten: Long)
 
 final case class DistExecOptions(
-    maxMaps: Option[Int] = None,
-    redirectErrorToOut: Boolean = false,
-    acceptExitCodes: Set[Int] = Set(0),
-    targetBytesPerMap: Long = 256L * 1024 * 1024, // reference BYTES_PER_MAP, DistExec.java:75
     // None → derived from the session at run time (the reference's
     // 20 × live-cluster-nodes, DistExec.java:419-426); Some(n) pins it.
-    defaultMapCap: Option[Int] = None)
+    maxMaps: Option[Int] = None,
+    redirectErrorToOut: Boolean = false)
 
 /** The core operator: pipe every file of the source trees through a shell
   * command, writing stdout (and a `.stderr` sidecar) to a mirrored path
@@ -169,7 +166,7 @@ object DistExecJob {
     val tmpRoot = new Path(if (special) dstPath.getParent else dstPath, s"_distexec_tmp_$jobId")
 
     val numTasks = Manifest.mapCount(fileCount,
-      options.maxMaps.orElse(options.defaultMapCap).getOrElse(sessionMapCap(spark)))
+      options.maxMaps.getOrElse(sessionMapCap(spark)))
     val target = math.max(totalBytes / numTasks, 1L)
 
     val binned = Manifest
@@ -179,7 +176,6 @@ object DistExecJob {
 
     val cmd = command
     val redirect = options.redirectErrorToOut
-    val accept = options.acceptExitCodes
     val tmpRootStr = tmpRoot.toString
     val dstStr = dstPath.toString
     val isSpecial = special
@@ -190,12 +186,9 @@ object DistExecJob {
 
     val statuses = binned.mapPartitions { it =>
       val taskConf = Manifest.restoreConf(confEntries)
-      val attempt = TaskContext.get() match {
-        case null => "local"
-        case tc   => s"${tc.stageAttemptNumber()}-${tc.taskAttemptId()}"
-      }
+      val attempt = taskAttempt()
       val dstFsTask = DstFileSystem.taskPrivate(dstStr, taskConf)
-      it.map(e => executeOne(taskConf, dstFsTask, e, dstStr, tmpRootStr, attempt, cmd, redirect, accept, isSpecial))
+      it.map(e => executeOne(taskConf, dstFsTask, e, dstStr, tmpRootStr, attempt, cmd, redirect, isSpecial))
     }
 
     // Eager + lineage-truncated: re-running the returned Dataset must NOT
@@ -247,11 +240,7 @@ object DistExecJob {
       .mapPartitions { it =>
         val root = new Path(dstStr)
         val taskFs = DstFileSystem.taskPrivate(dstStr, Manifest.restoreConf(confEntries))
-        val attempt = TaskContext.get() match {
-          case null => "local"
-          case tc   => s"${tc.stageAttemptNumber()}-${tc.taskAttemptId()}"
-        }
-        val tmp = new Path(root, s"_singleout_tmp_$attempt")
+        val tmp = new Path(root, s"_singleout_tmp_${taskAttempt()}")
         val out = taskFs.create(tmp, true)
         try {
           it.toArray.sorted.foreach { rel =>
@@ -302,6 +291,14 @@ object DistExecJob {
 
   // ---------------------------------------------------------------- task side
 
+  /** Attempt-unique tag for a task's tmp paths: a retried or speculative
+    * attempt never writes into another attempt's tmp files.
+    */
+  private def taskAttempt(): String = TaskContext.get() match {
+    case null => "local"
+    case tc   => s"${tc.stageAttemptNumber()}-${tc.taskAttemptId()}"
+  }
+
   /** Lazily-created output: no file materializes unless the stream gets
     * bytes — so empty stdout/stderr produces NO dst file (reference
     * LazyCreateOutputStream, ExecFilesMapper.java:46-80).
@@ -331,7 +328,6 @@ object DistExecJob {
       attempt: String,
       command: String,
       redirectErrorToOut: Boolean,
-      acceptExitCodes: Set[Int],
       special: Boolean): ExecStatus = {
     val srcPath = new Path(e.path)
     val dstFile =
@@ -341,20 +337,17 @@ object DistExecJob {
     val tmpErr = tmpFile.suffix(".stderr")
     try {
       val srcFs = srcPath.getFileSystem(conf)
-      val argv = CommandLine.translate(command)
       val in = srcFs.open(srcPath)
       val out = new LazyOut(dstFs, tmpFile)
       val err = new LazyOut(dstFs, tmpErr)
       val res =
-        try ProcessRunner.run(argv, in, out, err, redirectErrorToOut)
+        try Executor.execute(command, in, out, err, redirectErrorToOut)
         finally {
           try in.close() catch { case _: IOException => () }
           // err closes even when out's close throws (else its stream and
           // tmp file handle leak); the throw still fails the file
           try out.close() finally err.close()
         }
-      if (!ExitPolicy.accepts(argv, res.exitCode, acceptExitCodes))
-        throw new IOException(s"exit ${res.exitCode} from '$command' on ${e.path}")
       // Atomic publish: delete-existing + rename tmp→dst, per stream
       // (reference rename, ExecFilesMapper.java:156-170). No tmp ⇒ no file.
       if (out.created) rename(dstFs, tmpFile, dstFile)

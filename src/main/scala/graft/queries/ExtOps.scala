@@ -1220,14 +1220,14 @@ object ExtOps {
     // then removes bloom false positives, so the result is exactly the
     // plain join: the oracle HAS no bloom, proving the filter invisible.
     "c36_bloom_join" -> ((s, dir) => {
-      val urgent = load(s, dir, "orders", orderkeyJoin = true)
+      val urgent = load(s, dir, "orders")
         .filter(col("o_orderpriority") === "1-URGENT")
         .select(col("o_orderkey"), col("o_orderdate"))
       val bloom = RuntimeFilter.bloomFor(urgent, "o_orderkey")
       val pd = expr(
         """CAST(ROUND(l_extendedprice * 100) AS BIGINT)
           | * CAST(ROUND((1 - l_discount) * 10000) AS BIGINT)""".stripMargin)
-      val li = load(s, dir, "lineitem", orderkeyJoin = true).select(col("l_orderkey"), pd.as("pd"))
+      val li = load(s, dir, "lineitem").select(col("l_orderkey"), pd.as("pd"))
       RuntimeFilter.prefilter(li, col("l_orderkey"), bloom)
         .join(urgent, col("l_orderkey") === col("o_orderkey"))
         .groupBy((year(col("o_orderdate")) * 100 + month(col("o_orderdate")))

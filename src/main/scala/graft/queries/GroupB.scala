@@ -148,8 +148,8 @@ object GroupB {
     "b5_top_revenue" -> ((s, dir) => {
       val cut = lit(java.sql.Timestamp.valueOf("1998-03-15 00:00:00"))
       val cust = load(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-      val ord = load(s, dir, "orders", orderkeyJoin = true).filter(col("o_orderdate") < cut)
-      val li = load(s, dir, "lineitem", orderkeyJoin = true).filter(col("l_shipdate") > cut)
+      val ord = load(s, dir, "orders").filter(col("o_orderdate") < cut)
+      val li = load(s, dir, "lineitem").filter(col("l_shipdate") > cut)
       broadcast(cust)
         .join(ord, col("c_custkey") === col("o_custkey"))
         .join(li, col("o_orderkey") === col("l_orderkey"))
@@ -175,12 +175,12 @@ object GroupB {
     // contract.
     "b8_big_orders" -> ((s, dir) => {
       val qtyC = expr("CAST(ROUND(l_quantity * 100) AS BIGINT)")
-      val big = load(s, dir, "lineitem", orderkeyJoin = true)
+      val big = load(s, dir, "lineitem")
         .select(col("l_orderkey"), qtyC.as("q"))
         .groupBy(col("l_orderkey"))
         .agg(sum(col("q")).as("sq"))
         .filter(col("sq") > 250L * 100)
-      load(s, dir, "orders", orderkeyJoin = true)
+      load(s, dir, "orders")
         .join(big, col("o_orderkey") === col("l_orderkey"))
         .select(col("o_orderkey"), col("o_orderpriority"),
           (col("sq").cast("double") / 100.0).as("sum_qty"), col("o_totalprice"))
@@ -193,21 +193,17 @@ object GroupB {
     // gets NO hint (small enough for the static broadcast threshold at
     // bench SFs; a shuffle join at 100 TB — AQE's call either way is
     // cheap because the suppkey join is the LAST fact edge). The
-    // customer join and the orders⋈lineitem backbone are PINNED
+    // customer join and the orders⋈lineitem join are PINNED
     // shuffle_hash (r15, the b12/c55 discipline): at bench sizes the
     // date-filtered ord⋈cust side sits right at AQE's broadcast
     // threshold (~13 MB at 10×), and the runtime flip between broadcast
-    // and shuffle made the query BIMODAL — raw passes 6.6/1.4/4.0 s,
-    // bucketed 2.3/0.8/2.8 at 10× (bench_scale.json r14): two different
-    // plans alternating pass to pass. Neither broadcast is ADMISSIBLE
-    // at 100 TB (customer/5 and the month's ord⋈cust output are both
-    // far past any broadcast budget there), so the pins cost nothing at
-    // scale and buy a deterministic plan at the AQE-off controlled cost
-    // (1.45 s raw / 1.07 s bucketed at 10× — ScanShapeAb) instead of a
-    // 1.4–6.6 s lottery. In the bucketed layout the pinned backbone
-    // still reads lineitem exchange-free (the bucketed scan satisfies
-    // the SHJ's orderkey distribution); only the small ord⋈cust side
-    // shuffles.
+    // and shuffle made the query BIMODAL — passes 6.6/1.4/4.0 s at 10×
+    // (bench_scale.json r14): two different plans alternating pass to
+    // pass. Neither broadcast is ADMISSIBLE at 100 TB (customer/5 and
+    // the month's ord⋈cust output are both far past any broadcast
+    // budget there), so the pins cost nothing at scale and buy a
+    // deterministic plan at the AQE-off controlled cost (1.45 s at 10×
+    // — ScanShapeAb) instead of a 1.4–6.6 s lottery.
     "b9_local_supplier_volume" -> ((s, dir) => {
       val lo = lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00"))
       val hi = lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00"))
@@ -218,10 +214,10 @@ object GroupB {
       val cust = load(s, dir, "customer")
         .join(broadcast(asianNations), col("c_nationkey") === col("n_nationkey"))
         .select(col("c_custkey"), col("c_nationkey"), col("n_name"))
-      val ord = load(s, dir, "orders", orderkeyJoin = true)
+      val ord = load(s, dir, "orders")
         .filter(col("o_orderdate") >= lo && col("o_orderdate") < hi)
         .select(col("o_orderkey"), col("o_custkey"))
-      val li = load(s, dir, "lineitem", orderkeyJoin = true)
+      val li = load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"),
           (s2(col("l_extendedprice")) * s2(lit(1) - col("l_discount"))).as("rev"))
       val supp = load(s, dir, "supplier").select(col("s_suppkey"), col("s_nationkey"))
@@ -285,10 +281,10 @@ object GroupB {
       // (1.31→1.56 s measured); at 100 TB the saved output exchange
       // dominates — the b8/b9 rule of planning for the cluster, not
       // the bench box.
-      val ord = load(s, dir, "orders", orderkeyJoin = true).select(col("o_orderkey"), col("o_custkey"))
+      val ord = load(s, dir, "orders").select(col("o_orderkey"), col("o_custkey"))
         .join(cust, col("o_custkey") === col("c_custkey"))
         .select(col("o_orderkey"), col("cust_nation"))
-      val li = load(s, dir, "lineitem", orderkeyJoin = true)
+      val li = load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"),
           year(col("l_shipdate")).cast("long").as("l_year"),
           (s2(col("l_extendedprice")) * s2(lit(1) - col("l_discount"))).as("rev"))
@@ -371,9 +367,9 @@ object GroupB {
       // re-exchange (measured 7.9 s at 10×); shuffling the join on
       // orderkey hands the aggregates their distribution for free —
       // and is the only join shape orders admits at 100 TB anyway.
-      val flagged = load(s, dir, "lineitem", orderkeyJoin = true)
+      val flagged = load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_suppkey"), col("l_shipdate"))
-        .join(load(s, dir, "orders", orderkeyJoin = true).select(col("o_orderkey"), col("o_orderdate"))
+        .join(load(s, dir, "orders").select(col("o_orderkey"), col("o_orderdate"))
             .hint("shuffle_hash"),
           col("l_orderkey") === col("o_orderkey"))
         .select(col("l_orderkey"), col("l_suppkey"),

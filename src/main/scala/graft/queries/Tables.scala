@@ -36,32 +36,7 @@ object Tables {
     */
   def invalidate(): Unit = loaded.synchronized(loaded.clear())
 
-  /** `orderkeyJoin = true` marks a load whose downstream plan joins the
-    * lineitem⋈orders backbone on orderkey — ONLY those loads resolve to
-    * the bucketed layout when it is enabled (r16, verdict item 2a).
-    * Blanket resolution was measured at the 10× fair multi-file layout
-    * to cost the NON-riding cohort members real time (d22 +35%, b13
-    * +31%: the bucketed files buy them nothing — Spark already
-    * auto-disables the bucketed scan there — while the 91-way
-    * orderkey-sorted file layout reads worse than the natural one);
-    * the queries that DO ride the bucket key keep the co-located,
-    * exchange-free join.
-    */
-  def load(spark: SparkSession, dir: String, name: String,
-      orderkeyJoin: Boolean = false): DataFrame = {
-    // Flag-gated bucketed fact backbone (sources.Bucketed, r14): when
-    // the layout is enabled AND built for this dir, lineitem/orders
-    // loads DECLARED as backbone-join inputs resolve to their
-    // orderkey-bucketed catalog tables — the orderkey join downstream
-    // reads co-located buckets with no Exchange, no query spelling
-    // changes. Same rows, same schema; default OFF so the oracle-paired
-    // runs read the identical raw parquet. Not memoized: spark.table is
-    // a catalog lookup, and the flag may be toggled per-run within one
-    // session (A/B legs).
-    if (orderkeyJoin && graft.sources.Bucketed.enabled(spark)) {
-      val bt = graft.sources.Bucketed.backboneTable(spark, dir, name)
-      if (bt.isDefined) return bt.get
-    }
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val perSession = loaded.synchronized {
       var m = loaded.get(spark)
       if (m == null) {

@@ -56,10 +56,10 @@ object TpchRest {
     // never duplicates orders with many late lines. At 100 TB the date
     // filter prunes the orders scan before the shuffle.
     "b14_order_priority" -> ((s, dir) => {
-      val ord = load(s, dir, "orders", orderkeyJoin = true)
+      val ord = load(s, dir, "orders")
         .filter(col("o_orderdate") >= ts("1996-01-01") && col("o_orderdate") < ts("1996-04-01"))
         .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      val li = load(s, dir, "lineitem", orderkeyJoin = true).select(col("l_orderkey"), col("l_shipdate"))
+      val li = load(s, dir, "lineitem").select(col("l_orderkey"), col("l_shipdate"))
       ord.join(li,
           col("o_orderkey") === col("l_orderkey") &&
             col("l_shipdate") > col("o_orderdate") + expr("INTERVAL 30 DAYS"),
@@ -110,11 +110,11 @@ object TpchRest {
             .select(col("n_nationkey"), col("n_name").as("supp_nation"))),
           col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("supp_nation"))
-      val ord = load(s, dir, "orders", orderkeyJoin = true)
+      val ord = load(s, dir, "orders")
         .filter(col("o_orderdate") >= ts("1996-01-01") && col("o_orderdate") < ts("1998-01-01"))
         .select(col("o_orderkey"), col("o_custkey"),
           year(col("o_orderdate")).cast("long").as("o_year"))
-      load(s, dir, "lineitem", orderkeyJoin = true)
+      load(s, dir, "lineitem")
         .select(col("l_orderkey"), col("l_partkey"), col("l_suppkey"), rev)
         .join(part, col("l_partkey") === col("p_partkey"))
         .join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -142,7 +142,7 @@ object TpchRest {
             .select(col("n_nationkey"), col("n_name").as("supp_nation"))),
           col("s_nationkey") === col("n_nationkey"))
         .select(col("s_suppkey"), col("supp_nation"))
-      val ord = load(s, dir, "orders", orderkeyJoin = true)
+      val ord = load(s, dir, "orders")
         .select(col("o_orderkey"), year(col("o_orderdate")).cast("long").as("o_year"))
       // profit_micros = rev_micros − retail_cents · qty_x100 · 100
       // (cents·qty-hundredths ×100 = micros; all factors exact ints).
@@ -150,7 +150,7 @@ object TpchRest {
         expr("""CAST(ROUND(p_retailprice * 100) AS BIGINT)
                | * CAST(ROUND(l_quantity * 100) AS BIGINT) * 100""".stripMargin))
         .as("profit_micros")
-      load(s, dir, "lineitem", orderkeyJoin = true)
+      load(s, dir, "lineitem")
         .join(part, col("l_partkey") === col("p_partkey"))
         .join(suppNation, col("l_suppkey") === col("s_suppkey"))
         .join(ord, col("l_orderkey") === col("o_orderkey"))
@@ -166,10 +166,10 @@ object TpchRest {
     // broadcast; top-20 is a TopK over the aggregate, not a global sort
     // of all customers.
     "b18_returned_items" -> ((s, dir) => {
-      val ord = load(s, dir, "orders", orderkeyJoin = true)
+      val ord = load(s, dir, "orders")
         .filter(col("o_orderdate") >= ts("1996-10-01") && col("o_orderdate") < ts("1997-01-01"))
         .select(col("o_orderkey"), col("o_custkey"))
-      val li = load(s, dir, "lineitem", orderkeyJoin = true).filter(col("l_returnflag") === "R")
+      val li = load(s, dir, "lineitem").filter(col("l_returnflag") === "R")
         .select(col("l_orderkey"), rev)
       val cust = load(s, dir, "customer")
         .join(broadcast(load(s, dir, "nation")
@@ -215,9 +215,9 @@ object TpchRest {
     // output — map-side partial aggs reduce to 3 rows before the final
     // exchange.
     "b20_ship_delay" -> ((s, dir) => {
-      val ord = load(s, dir, "orders", orderkeyJoin = true)
+      val ord = load(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderdate"), col("o_orderpriority"))
-      load(s, dir, "lineitem", orderkeyJoin = true)
+      load(s, dir, "lineitem")
         .filter(col("l_shipdate") >= ts("1997-01-01") && col("l_shipdate") < ts("1998-01-01"))
         .select(col("l_orderkey"), col("l_shipdate"))
         .join(ord, col("l_orderkey") === col("o_orderkey"))

@@ -152,24 +152,6 @@ object ScaleSmoke {
       println(f"[scale] $name%-24s sf0.1=$t1%6.2fs x10=$t10%7.2fs ratio=${t10 / t1}%5.1f")
     }
 
-    // SPARK_GRAFT_BUCKETED=1 runs the WHOLE linear ladder on the
-    // bucketed fact backbone — the bench's r15+ headline layout — so
-    // the smoke's b9/b12 story matches the bench's (r15 verdict item 7:
-    // the r14 smoke read b12 at ratio 8.6 on the raw layout, an AQE
-    // flap the bucketed layout removes; a smoke that measures a layout
-    // the headline no longer ships is evidence about nothing). Raw
-    // remains the default so existing logs stay comparable; a both-
-    // layout session is two invocations.
-    if (sys.env.get("SPARK_GRAFT_BUCKETED").exists(v => v == "1" || v.equalsIgnoreCase("true"))) {
-      import graft.sources.Bucketed
-      setShuffle(src)
-      val w1 = Bucketed.ensureBackbone(spark, src)
-      setShuffle(dst)
-      val w10 = Bucketed.ensureBackbone(spark, dst)
-      println(f"[scale] backbone writes (once, untimed): sf0.1 $w1%.2fs x10 $w10%.2fs")
-      spark.conf.set(Bucketed.FlagConf, "true")
-    }
-
     for (q <- LinearQueries.filter(n => only.forall(_.exists(n.startsWith)))) {
       val fn = SparkEntry.queries(q)
       setShuffle(src)
@@ -213,28 +195,6 @@ object ScaleSmoke {
     Similarity.semDedup(e10, cellsN, 2, 0.42).collect()
     val s10 = bestOf(2)(Similarity.semDedup(e10, cellsN, 2, 0.42).collect())
     report(s"c31_semdedup (8~$cellsN)", s1, s10)
-    }
-
-    // Bucketed fact-backbone leg (r14 — the shipped layout rule,
-    // sources.Bucketed): pay the orderkey write shuffle once at the
-    // scaled size, then re-run the fact-join cohort with Tables.load
-    // resolving lineitem/orders to the co-located layout. The numbers
-    // to read against the raw x10 column above: the delta is what every
-    // repeatedly-joined 100 TB corpus buys by shipping bucketed.
-    if (only.forall(_.exists(p => "bucketed".startsWith(p)))) {
-      import graft.sources.Bucketed
-      val cohort = Seq("b9_local_supplier_volume", "b12_waiting_suppliers",
-        "b13_part_top_supplier", "b5_top_revenue", "b11_nation_volume")
-      setShuffle(dst)
-      val wSec = Bucketed.ensureBackbone(spark, dst)
-      println(f"[scale] bucketed: backbone write (once) $wSec%6.2fs")
-      spark.conf.set(Bucketed.FlagConf, "true")
-      try for (q <- cohort) {
-        val fn = SparkEntry.queries(q)
-        fn(spark, dst).collect()
-        val tb = bestOf(2)(fn(spark, dst).collect())
-        println(f"[scale] $q%-24s x10 bucketed=$tb%7.2fs")
-      } finally spark.conf.unset(Bucketed.FlagConf)
     }
 
     // Exec-operator leg (r14, verdict item 9): the reference's core

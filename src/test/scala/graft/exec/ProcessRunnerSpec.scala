@@ -77,11 +77,4 @@ class ProcessRunnerSpec extends AnyFunSuite {
     val res = Executor.execute("grep nomatch", bytes("other text\n"), sink, sink)
     assert(res.exitCode == 1)
   }
-
-  test("custom acceptExitCodes") {
-    val sink = new ByteArrayOutputStream()
-    val res = Executor.execute("sh -c 'exit 3'", bytes(""), sink, sink,
-      acceptExitCodes = Set(0, 3))
-    assert(res.exitCode == 3)
-  }
 }

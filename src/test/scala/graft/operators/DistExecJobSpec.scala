@@ -99,6 +99,20 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
     assert(c.failed == 3 && c.executed == 0)
   }
 
+  test("command that cannot start: job returns, one FAIL row per file, nothing written") {
+    val src = mkTree()
+    val dst = tmpDst()
+    val rows = DistExecJob.run(spark, Seq(src.toString), dst.toString,
+      "graft-no-such-command --flag").collect()
+    assert(rows.map(_.relativeDst).sorted.toSeq == Seq("a.txt", "b.txt", "sub/c.txt"))
+    assert(rows.forall(r => !r.ok && r.error.startsWith(s"FAIL ${r.relativeDst} : ")),
+      rows.toSeq)
+    assert(rows.forall(_.error.contains("graft-no-such-command")), rows.toSeq)
+    val left = walk(dst).filter(_ != dst)
+    assert(left.forall(Files.isDirectory(_)), s"files written: $left")
+    assert(!left.exists(_.toString.contains("_distexec_tmp_")), s"tmp left: $left")
+  }
+
   test("stderr sidecar: .stderr file written only when stderr non-empty") {
     val src = mkTree()
     val dst = tmpDst()
@@ -307,7 +321,7 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
     val tmpRoot = dst.resolve("_distexec_tmp_close")
     val st = DistExecJob.executeOne(conf, failing, entry, dst.toString, tmpRoot.toString,
       "0-1", "sh -c 'cat; echo oops >&2'", redirectErrorToOut = false,
-      acceptExitCodes = Set(0), special = false)
+      special = false)
     assert(!st.ok && st.error.contains("injected close failure"), st)
     assert(closed.asScala == Set("f.txt", "f.txt.stderr"), s"closed: $closed")
     assert(walk(dst).forall(Files.isDirectory(_)), s"files left: ${walk(dst)}")
@@ -340,7 +354,7 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
           barrier.await()
           results.add(DistExecJob.executeOne(conf, dstFs, entry, dst.toString,
             tmpRoot, attempt, "cat", redirectErrorToOut = false,
-            acceptExitCodes = Set(0), special = false))
+            special = false))
         })
       }
       threads.foreach(_.start()); threads.foreach(_.join())

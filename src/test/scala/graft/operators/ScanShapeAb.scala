@@ -357,13 +357,10 @@ object ScanShapeAb {
       }
     }
 
-    // ---- b9/b10 decomposition + the Bucketed structural lever (r13,
-    // verdict item 3): the fact-join cohort's 10× residual (b9 1.73 vs
-    // DuckDB 0.108, b10 1.13 vs 0.195) is claimed constant-factor — these
-    // legs bound it the d22 way (scan / dim-join / backbone / agg), and
-    // the bucket legs measure the ONE structural change not yet tried:
-    // lineitem+orders stored bucketed on orderkey (sources.Bucketed), so
-    // every orderkey join reads co-located buckets with NO Exchange.
+    // ---- b9/b10 decomposition (r13, verdict item 3): the fact-join
+    // cohort's 10× residual (b9 1.73 vs DuckDB 0.108, b10 1.13 vs 0.195)
+    // is claimed constant-factor — these legs bound it the d22 way
+    // (scan / dim-join / backbone / agg).
     def b9shape(li0: DataFrame, ord0: DataFrame): DataFrame = {
       val lo = lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00"))
       val hi = lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00"))
@@ -462,38 +459,6 @@ object ScanShapeAb {
       report("b12 full (as declared)",
         time(3)(b12shape(liRaw, ordRaw).collect()))
     }
-    if (want("bucketab")) {
-      // bucketed replicas of the SAME data: pay the orderkey shuffle once
-      // at write, then measure the orderkey-join queries on the co-located
-      // layout. 32 buckets ≈ one bucket per core at local[32]; bucket
-      // metadata lives in the session catalog, so reads go via table name.
-      import graft.sources.Bucketed
-      if (!spark.catalog.tableExists("li_bkt")) {
-        val t0 = System.nanoTime()
-        Bucketed.writeBucketed(load(spark, dir, "lineitem"), "li_bkt",
-          "l_orderkey", 32)
-        Bucketed.writeBucketed(load(spark, dir, "orders"), "ord_bkt",
-          "o_orderkey", 32)
-        println(f"[scanshape] bucket write (once)   ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      }
-      val liB = spark.table("li_bkt")
-      val ordB = spark.table("ord_bkt")
-      report("b9 full, bucketed li+ord",
-        time(3)(b9shape(liB, ordB).collect()))
-      report("b12 full, bucketed li+ord",
-        time(3)(b12shape(liB, ordB).collect()))
-      report("b9 backbone, bucketed", time(3) {
-        val ord = ordB.filter(
-          col("o_orderdate") >= lit(java.sql.Timestamp.valueOf("1996-01-01 00:00:00")) &&
-          col("o_orderdate") < lit(java.sql.Timestamp.valueOf("1997-01-01 00:00:00")))
-          .select(col("o_orderkey"))
-        liB.select(col("l_orderkey"),
-          (dec2(col("l_extendedprice")) * fac4(lit(1) - col("l_discount"))).as("rev"))
-          .join(ord, col("l_orderkey") === col("o_orderkey"))
-          .agg(sum(col("rev"))).collect()
-      })
-    }
-
     // ---- checkpoint audit (r13, verdict item 2): c70's lesson was that
     // a localCheckpoint of a NARROW PROJECTION OF A RAW SCAN reads
     // slower than re-scanning column-pruned parquet (the row cache
