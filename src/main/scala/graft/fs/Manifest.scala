@@ -2,9 +2,11 @@ package graft.fs
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.{HashPartitioner, Partitioner}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{BooleanType, LongType, StringType, StructField, StructType}
 
 import scala.collection.mutable
 
@@ -278,65 +280,194 @@ object Manifest {
   }
 
   /** Duplicate-destination check: the reference sorts the dst manifest and
-    * compares adjacent keys (DistExec.java:647-673); in Spark a hash
-    * aggregation needs no sort. Throws [[DuplicationException]] listing
-    * offending destinations (exit −2 parity lives in the CLI).
+    * compares adjacent keys (DistExec.java:647-673); here it is the
+    * planning pass's shuffle by destination name (no sort). Throws
+    * [[DuplicationException]] listing up to 20 offending destinations in
+    * sorted order, each with its sorted sources (exit −2 parity lives in
+    * the CLI).
     */
-  def checkDuplication(manifest: Dataset[FileEntry]): Unit = {
-    val dups = manifest
-      .filter(!col("isDir"))
-      .groupBy(col("relativeDst"))
-      .agg(count(lit(1)).as("n"), sort_array(collect_list(col("path"))).as("srcs"))
-      .filter(col("n") > 1)
-      .orderBy(col("relativeDst"))
-      .limit(20)
-      .collect()
-    if (dups.nonEmpty) {
-      val msg = dups
-        .map(r => s"${r.getString(0)} <- ${r.getSeq[String](2).mkString(", ")}")
-        .mkString("; ")
+  def checkDuplication(manifest: Dataset[FileEntry]): Unit = plan(manifest).checkDuplication()
+
+  /** What the one planning pass over a manifest returns. `dups` holds up
+    * to [[MaxDups]] duplicated destination names in sorted order, each
+    * with its sorted sources; `dirCount` leaves out the `"."` root rows;
+    * `bucketOffsets` lists every (root, bucket) of [[binPack]] in order,
+    * each with the bytes of the same root's earlier buckets.
+    */
+  private[graft] final case class Plan(
+      dups: Seq[(String, Seq[String])],
+      fileCount: Long,
+      totalBytes: Long,
+      dirCount: Long,
+      bucketOffsets: Seq[((String, Int), Long)]) {
+
+    def checkDuplication(): Unit = if (dups.nonEmpty) {
+      val msg = dups.map { case (name, srcs) => s"$name <- ${srcs.mkString(", ")}" }.mkString("; ")
       throw new DuplicationException(s"duplicate destination names: $msg")
     }
   }
 
+  private val MaxDups = 20
+
+  // The planning pass shuffles three kinds of key: a destination name
+  // (value: how many files claim it and their paths), a (root, bucket)
+  // byte subtotal, and the file/byte/directory totals.
+  private sealed trait PlanKey
+  private final case class NameKey(relativeDst: String) extends PlanKey
+  private final case class BucketKey(root: String, bucket: Int) extends PlanKey
+  private case object TotalsKey extends PlanKey
+  private final case class PlanVal(n: Long, bytes: Long, dirs: Long, srcs: List[String]) {
+    def +(o: PlanVal): PlanVal = PlanVal(n + o.n, bytes + o.bytes, dirs + o.dirs, srcs ++ o.srcs)
+  }
+
+  /** The duplicate check, the planning stats and the bucket byte totals of
+    * [[binPack]] in ONE Spark job: a shuffle by destination name with a
+    * map-side combine (a unique name ships one record), the subtotals
+    * folded into the same shuffle under their own keys. The driver gets
+    * at most 20 duplicates per partition, one byte total per (root,
+    * bucket) and the three totals, never the manifest.
+    */
+  private[graft] def plan(manifest: Dataset[FileEntry]): Plan = {
+    val rows = manifest.rdd
+    val reduced = rows
+      .mapPartitions[(PlanKey, PlanVal)] { it =>
+        val buckets = mutable.HashMap.empty[(String, Int), Long]
+        var files, bytes, dirs = 0L
+        val names = it.flatMap { e =>
+          if (e.isDir) {
+            if (e.relativeDst != ".") dirs += 1
+            None
+          } else {
+            files += 1
+            bytes += e.length
+            val k = (e.root, bucket(e))
+            buckets(k) = buckets.getOrElse(k, 0L) + e.length
+            Some(NameKey(e.relativeDst) -> PlanVal(1, 0, 0, List(e.path)))
+          }
+        }
+        // `++` takes its argument by name: the subtotals are read after
+        // the last name has gone by
+        names ++ (buckets.iterator.map { case ((r, b), n) => BucketKey(r, b) -> PlanVal(0, n, 0, Nil) } ++
+          Iterator.single(TotalsKey -> PlanVal(files, bytes, dirs, Nil)))
+      }
+      .reduceByKey(new HashPartitioner(math.max(1, rows.getNumPartitions)), _ + _)
+      .mapPartitions { it =>
+        // the largest name leaves first, so the queue keeps the smallest
+        val top = mutable.PriorityQueue.empty[(String, PlanVal)](
+          Ordering.by[(String, PlanVal), String](_._1)(CodePointOrder))
+        val subtotals = it.filter {
+          case (NameKey(name), v) =>
+            if (v.n > 1) {
+              top += name -> v
+              if (top.size > MaxDups) top.dequeue()
+            }
+            false
+          case _ => true
+        }.toVector
+        subtotals.iterator ++ top.iterator.map { case (name, v) => NameKey(name) -> v }
+      }
+      .collect()
+    var totals = PlanVal(0, 0, 0, Nil)
+    val dups = mutable.ArrayBuffer.empty[(String, Seq[String])]
+    val buckets = mutable.ArrayBuffer.empty[((String, Int), Long)]
+    reduced.foreach {
+      case (NameKey(name), v) => dups += name -> v.srcs.sorted(CodePointOrder)
+      case (BucketKey(r, b), v) => buckets += (r, b) -> v.bytes
+      case (TotalsKey, v) => totals = v
+    }
+    var root: String = null
+    var off = 0L
+    val offsets = buckets.sortBy(_._1)(Ordering.Tuple2(CodePointOrder, Ordering.Int)).map {
+      case (k @ (r, _), n) =>
+        if (r != root) { root = r; off = 0L }
+        off += n
+        k -> (off - n)
+    }
+    Plan(dups.sortBy(_._1)(CodePointOrder).take(MaxDups).toSeq,
+      totals.n, totals.bytes, totals.dirs, offsets.toSeq)
+  }
+
+  /** Bucket of a file for [[binPack]]: the first code point of its path
+    * below the root, −1 for a root that is itself a file (it sorts before
+    * every child). The trailing-slash trim matters for filesystem roots
+    * ('file:/', 's3a://bucket/'): without it the bucket is the child's
+    * SECOND character and bucket order no longer matches path order.
+    */
+  private def bucket(e: FileEntry): Int = {
+    var end = e.root.length
+    while (end > 0 && e.root.charAt(end - 1) == '/') end -= 1
+    val at = end + 1
+    if (e.path.length > at) e.path.codePointAt(at) else -1
+  }
+
   /** Size-weighted bin packing: assign each file a split id via running
     * byte sum / target — the reference's greedy `getSplits`
-    * (DistExec.java:132-177) as window expressions.
+    * (DistExec.java:132-177), where a file's bin is
+    * `floor((cum - length) / target)` and `cum` is the running byte sum
+    * over its root in path order.
     *
-    * Two-level distributed prefix sum, NOT a single per-root window: a
-    * single `partitionBy(root)` window puts a whole source tree on one
-    * task, which serializes exactly when it matters (one 100 TB root).
-    * Instead: (1) bucket each file by the first character of its
-    * path-after-root — buckets are CONTIGUOUS in path order, so per-
-    * (root, bucket) local running sums + (2) a tiny per-root window over
-    * bucket byte totals (≤ 257 rows per root) recompose the EXACT global
-    * running sum: `cum = local_cum + offset(previous buckets)`. Bit-
-    * identical bins to the serial formulation (asserted in
-    * ManifestSpec), with per-bucket parallelism.
+    * Two-level distributed prefix sum, NOT a single pass per root: that
+    * puts a whole source tree on one task, which serializes exactly when
+    * it matters (one 100 TB root). Instead each file is bucketed by the
+    * first character of its path below the root; buckets are CONTIGUOUS
+    * in path order. (1) The planning pass returns each (root, bucket)'s
+    * byte total (≤ 257 per root), which the driver sums into bucket
+    * offsets. (2) One sort within partitions keyed (bucket, path) gives
+    * each bucket's local running sum: `cum = local_cum + offset`. Bit-
+    * identical bins to the serial formulation (asserted in ManifestSpec),
+    * with per-bucket parallelism.
+    *
+    * Returns the files with columns root, path, relativeDst, length,
+    * isDir, modificationTime, cum and bin.
     */
-  def binPack(manifest: Dataset[FileEntry], targetBytes: Long): Dataset[org.apache.spark.sql.Row] = {
-    val files = manifest.filter(!col("isDir"))
-      // First char of the path below the root ('' for a root that is
-      // itself a file — sorts before every child, its own bucket). The
-      // trailing-slash trim matters for filesystem roots ('file:/',
-      // 's3a://bucket/'): without it the bucket is the child's SECOND
-      // character and bucket order no longer matches path order.
-      .withColumn("bkt",
-        expr("substring(path, length(trim(TRAILING '/' FROM root)) + 2, 1)"))
-    val wLocal = Window.partitionBy(col("root"), col("bkt")).orderBy(col("path"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wOffset = Window.partitionBy(col("root")).orderBy(col("bkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = files.groupBy(col("root"), col("bkt"))
-      .agg(sum(col("length")).as("bkt_bytes"))
-      .withColumn("off", coalesce(sum(col("bkt_bytes")).over(wOffset), lit(0L)))
-      .select(col("root"), col("bkt"), col("off"))
-    files
-      .withColumn("lcum", sum(col("length")).over(wLocal))
-      .join(offsets, Seq("root", "bkt"))
-      .withColumn("cum", col("lcum") + col("off"))
-      .withColumn("bin", floor((col("cum") - col("length")) / lit(targetBytes)))
-      .drop("bkt", "lcum", "off")
+  def binPack(manifest: Dataset[FileEntry], targetBytes: Long): Dataset[Row] = {
+    val rows = binned(manifest, plan(manifest), targetBytes).map { case (e, cum, bin) =>
+      Row(e.root, e.path, e.relativeDst, e.length, e.isDir, e.modificationTime, cum, bin)
+    }
+    manifest.sparkSession.createDataFrame(rows, BinSchema)
+  }
+
+  private val BinSchema = StructType(Seq(
+    StructField("root", StringType),
+    StructField("path", StringType),
+    StructField("relativeDst", StringType),
+    StructField("length", LongType, nullable = false),
+    StructField("isDir", BooleanType, nullable = false),
+    StructField("modificationTime", LongType, nullable = false),
+    StructField("cum", LongType),
+    StructField("bin", LongType)))
+
+  /** [[binPack]] over a finished planning pass: each file with its `cum`
+    * and `bin`. The buckets are numbered on the driver and bucket i sorts
+    * on partition i mod n, so no bucket is split and none is hashed.
+    */
+  private[graft] def binned(manifest: Dataset[FileEntry], plan: Plan, targetBytes: Long)
+      : RDD[(FileEntry, Long, Long)] = {
+    val index = plan.bucketOffsets.map(_._1).zipWithIndex.toMap
+    val offsets = plan.bucketOffsets.map(_._2).toArray
+    val parts = math.max(1, math.min(offsets.length, manifest.sparkSession.sparkContext.defaultParallelism))
+    implicit val byBucketThenPath: Ordering[(Int, String)] = Ordering.Tuple2(Ordering.Int, CodePointOrder)
+    manifest.rdd
+      .flatMap { e =>
+        if (e.isDir) None
+        else {
+          val b = index.getOrElse((e.root, bucket(e)), throw new IllegalStateException(
+            s"${e.path} is in a bucket the planning pass did not see: the manifest changed between passes"))
+          Some((b, e.path) -> e)
+        }
+      }
+      .repartitionAndSortWithinPartitions(new ModPartitioner(parts))
+      .mapPartitions { it =>
+        var cur = -1
+        var lcum = 0L
+        it.map { case ((b, _), e) =>
+          if (b != cur) { cur = b; lcum = 0L }
+          lcum += e.length
+          val cum = lcum + offsets(b)
+          // Spark's `floor(long / long)`: a double division, then floor
+          (e, cum, math.floor((cum - e.length).toDouble / targetBytes).toLong)
+        }
+      }
   }
 
   /** Map-count rule: `max(min(fileCount, cap), 1)` — file-count based, not
@@ -345,4 +476,35 @@ object Manifest {
     */
   def mapCount(fileCount: Long, cap: Int): Int =
     math.max(math.min(fileCount, cap.toLong).toInt, 1)
+}
+
+/** String order by Unicode code point: Spark's binary string order
+  * (UTF-8 bytes), which `String.compareTo` (UTF-16 units) departs from
+  * above U+FFFF.
+  */
+private[graft] object CodePointOrder extends Ordering[String] {
+  def compare(a: String, b: String): Int = {
+    var i = 0
+    while (i < a.length && i < b.length) {
+      val ca = a.codePointAt(i)
+      val cb = b.codePointAt(i)
+      if (ca != cb) return Integer.compare(ca, cb)
+      i += Character.charCount(ca)
+    }
+    Integer.compare(a.length, b.length)
+  }
+}
+
+/** Sends key k, or the first element of a pair key, to partition
+  * k mod `numPartitions`: an exact placement where a hash partitioner
+  * would stack some keys on one partition and leave others empty.
+  */
+private[graft] final class ModPartitioner(val numPartitions: Int) extends Partitioner {
+  def getPartition(key: Any): Int = {
+    val k: Long = key match {
+      case (i: Int, _) => i
+      case i: Long => i
+    }
+    java.lang.Math.floorMod(k, numPartitions.toLong).toInt
+  }
 }

@@ -1,15 +1,15 @@
 package graft.operators
 
-import java.io.{ByteArrayInputStream, IOException, OutputStream}
+import java.io.{IOException, OutputStream}
+import java.nio.charset.StandardCharsets
 
 import graft.exec.{CommandLine, Executor}
-import graft.fs.{DstFileSystem, FileEntry, Manifest}
+import graft.fs.{DstFileSystem, FileEntry, Manifest, ModPartitioner}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Per-file execution outcome (reference's FAIL log rows + counters,
   * ExecFilesMapper.java:27,184-187, re-expressed as a status Dataset).
@@ -37,10 +37,14 @@ final case class DistExecOptions(
   *
   * Spark-native redesign of the reference's map-only job
   * (DistExec.java:318-339 + ExecFilesMapper.java:82-208): the manifest is
-  * a `Dataset[FileEntry]`, split planning is size-weighted binning +
-  * `repartition`, and the per-file exec runs inside `mapPartitions`
-  * (opaque to Catalyst by design — process spawn dominates cost, like
-  * `RDD.pipe` but per-file and binary-safe).
+  * a `Dataset[FileEntry]`; one planning pass over it checks duplicates
+  * and counts ([[Manifest.checkDuplication]]); split planning is
+  * size-weighted binning ([[Manifest.binPack]]) with bin b placed on
+  * task b mod the task count; and the per-file exec runs inside
+  * `mapPartitions` (opaque to Catalyst by design — process spawn
+  * dominates cost, like `RDD.pipe` but per-file and binary-safe). The
+  * planning and accounting are RDD passes, so a run plus its counters
+  * and failure log takes five Spark jobs.
   *
   * Scale/durability deltas vs the reference:
   *  - tmp paths are task-attempt-unique + atomic rename, so speculative
@@ -113,7 +117,9 @@ object DistExecJob {
     * IMPORTANT: build the manifest with the SAME `special` value
     * [[run]] would compute ([[manifestSpecial]]) or the root-choice
     * semantics (nest under dst/<srcname> vs contents-into-dst) will not
-    * match the reference's.
+    * match the reference's. The manifest is read by each pass (planning,
+    * directories, exec), so it must read the same rows every time, as the
+    * outputs of [[Manifest.build]] and [[Manifest.listDistributed]] do.
     */
   def runManifest(
       spark: SparkSession,
@@ -124,42 +130,38 @@ object DistExecJob {
     import spark.implicits._
     CommandLine.translate(command) // fail fast on unbalanced quotes (R1/R11)
 
-    Manifest.checkDuplication(manifest)
+    // One pass plans the job, before anything under dst is created: the
+    // duplicate check, the counts and the bucket byte totals binning
+    // needs. The driver sees those, never the manifest (SURVEY R5).
+    val plan = Manifest.plan(manifest)
+    plan.checkDuplication()
 
     val conf = spark.sparkContext.hadoopConfiguration
     val dstPath = new Path(dst)
     val dstFs = dstPath.getFileSystem(conf)
-
-    // Planning stats WITHOUT collecting the manifest: at 100 TB the
-    // manifest is millions of rows — it must stay a Dataset end to end
-    // (SURVEY R5). The driver only ever sees three numbers.
-    val files = manifest.filter(!col("isDir"))
-    val dirs = manifest.filter(col("isDir") && col("relativeDst") =!= ".")
-    val statsRow = manifest.agg(
-      sum(when(!col("isDir"), 1L).otherwise(0L)),
-      sum(when(!col("isDir"), col("length")).otherwise(0L)),
-      sum(when(col("isDir") && col("relativeDst") =!= ".", 1L).otherwise(0L))).head()
-    val fileCount = if (statsRow.isNullAt(0)) 0L else statsRow.getLong(0)
-    val totalBytes = math.max(if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1), 1L)
-    val dirCount = if (statsRow.isNullAt(2)) 0L else statsRow.getLong(2)
+    val fileCount = plan.fileCount
+    val totalBytes = math.max(plan.totalBytes, 1L)
 
     // Reference "special" single-file case (DistExec.java:545,
     // ExecFilesMapper.java:131-139): exactly one src file into a
     // nonexistent/non-dir dst → dst itself is the output file.
-    val special = fileCount == 1 && dirCount == 0 &&
+    val special = fileCount == 1 && plan.dirCount == 0 &&
       (!dstFs.exists(dstPath) || dstFs.getFileStatus(dstPath).isFile)
 
-    val confEntriesForDirs = Manifest.hadoopConfEntries(conf)
-    val dstStrForDirs = dstPath.toString
+    // Ship the driver's effective Hadoop config (credentials, defaultFS,
+    // spark.hadoop.* overrides) — a bare `new Configuration()` on the
+    // executor would see classpath defaults only.
+    val confEntries = Manifest.hadoopConfEntries(conf)
+    val dstStr = dstPath.toString
     // Dest-dir semantics (DistExec.java:543-545,623-628): materialize the
     // dst root when more than one source entry lands in it, then every
     // manifest dir (preserving EMPTY dirs) — created from executors, so a
     // million-directory tree never funnels through the driver.
     if (!special) dstFs.mkdirs(dstPath)
-    dirs.foreachPartition { (it: Iterator[FileEntry]) =>
-      val root = new Path(dstStrForDirs)
-      val fs = DstFileSystem.taskPrivate(dstStrForDirs, Manifest.restoreConf(confEntriesForDirs))
-      it.foreach(d => fs.mkdirs(new Path(root, d.relativeDst)))
+    if (plan.dirCount > 0) manifest.rdd.foreachPartition { (it: Iterator[FileEntry]) =>
+      val root = new Path(dstStr)
+      val fs = DstFileSystem.taskPrivate(dstStr, Manifest.restoreConf(confEntries))
+      it.foreach(d => if (d.isDir && d.relativeDst != ".") fs.mkdirs(new Path(root, d.relativeDst)))
     }
 
     val jobId = java.lang.Long.toString(System.nanoTime(), 36)
@@ -169,22 +171,17 @@ object DistExecJob {
       options.maxMaps.getOrElse(sessionMapCap(spark)))
     val target = math.max(totalBytes / numTasks, 1L)
 
-    val binned = Manifest
-      .binPack(files, target)
-      .repartition(numTasks, col("bin"))
-      .as[FileEntry](implicitly[org.apache.spark.sql.Encoder[FileEntry]])
+    // bin b runs on task b mod numTasks
+    val byTask = Manifest.binned(manifest, plan, target)
+      .map { case (e, _, bin) => (bin, e) }
+      .partitionBy(new ModPartitioner(numTasks))
+      .values
 
     val cmd = command
     val redirect = options.redirectErrorToOut
     val tmpRootStr = tmpRoot.toString
-    val dstStr = dstPath.toString
     val isSpecial = special
-    // Ship the driver's effective Hadoop config (credentials, defaultFS,
-    // spark.hadoop.* overrides) — a bare `new Configuration()` on the
-    // executor would see classpath defaults only.
-    val confEntries = Manifest.hadoopConfEntries(conf)
-
-    val statuses = binned.mapPartitions { it =>
+    val statuses = byTask.mapPartitions { it =>
       val taskConf = Manifest.restoreConf(confEntries)
       val attempt = taskAttempt()
       val dstFsTask = DstFileSystem.taskPrivate(dstStr, taskConf)
@@ -193,23 +190,22 @@ object DistExecJob {
 
     // Eager + lineage-truncated: re-running the returned Dataset must NOT
     // re-execute child processes.
-    val out = statuses.localCheckpoint(true)
+    val out = spark.createDataset(statuses).localCheckpoint(true)
     try dstFs.delete(tmpRoot, true) catch { case _: IOException => () }
     out
   }
 
   /** Aggregate the reference's four counters (EXECUTED, FAIL,
-    * BYTESEXECUTED, BYTESWRITTEN) from a status Dataset.
+    * BYTESEXECUTED, BYTESWRITTEN) from a status Dataset: one stage, each
+    * task folds its partition and the driver adds the partials.
     */
-  def counters(status: Dataset[ExecStatus]): ExecCounters = {
-    val r = status.agg(
-      sum(when(col("ok"), 1L).otherwise(0L)),
-      sum(when(!col("ok"), 1L).otherwise(0L)),
-      sum(col("bytesIn")),
-      sum(col("bytesOut"))).head()
-    def l(i: Int): Long = if (r.isNullAt(i)) 0L else r.getLong(i)
-    ExecCounters(l(0), l(1), l(2), l(3))
-  }
+  def counters(status: Dataset[ExecStatus]): ExecCounters =
+    status.rdd
+      .map(s => ExecCounters(if (s.ok) 1L else 0L, if (s.ok) 0L else 1L, s.bytesIn, s.bytesOut))
+      .fold(ExecCounters(0L, 0L, 0L, 0L)) { (a, b) =>
+        ExecCounters(a.executed + b.executed, a.failed + b.failed,
+          a.bytesExecuted + b.bytesExecuted, a.bytesWritten + b.bytesWritten)
+      }
 
   /** `-singleOut` (README-promised, never implemented in the reference —
     * README.md:48, TODO at DistExec.java:453): combine all per-file stdout
@@ -247,10 +243,10 @@ object DistExecJob {
             val in = taskFs.open(new Path(root, rel))
             try {
               val reader = new java.io.BufferedReader(
-                new java.io.InputStreamReader(in, java.nio.charset.StandardCharsets.UTF_8))
+                new java.io.InputStreamReader(in, StandardCharsets.UTF_8))
               var line = reader.readLine()
               while (line != null) {
-                out.write(s"$rel:\t$line\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+                out.write(s"$rel:\t$line\n".getBytes(StandardCharsets.UTF_8))
                 line = reader.readLine()
               }
             } finally in.close()
@@ -260,9 +256,7 @@ object DistExecJob {
         // then rename, so a speculative/retried merge task never
         // interleaves with a competing writer.
         val target = new Path(root, "_singleout")
-        if (taskFs.exists(target)) taskFs.delete(target, false)
-        if (!taskFs.rename(tmp, target))
-          throw new IOException(s"failed to rename $tmp to $target")
+        rename(taskFs, tmp, target)
         Iterator(target.toString)
       }
       .collect() // force the single merge task
@@ -272,11 +266,15 @@ object DistExecJob {
   /** Failure-log sink (reference parity: FAIL rows land in a
     * `_distexec_logs_<id>` directory, DistExec.java:507-521 — inside dst
     * when dst is an existing directory, beside it otherwise). Returns the
-    * log path; written even when there are no failures (the reference's
-    * job-output dir always exists).
+    * log path; the directory exists even when there are no failures (the
+    * reference's job-output dir always exists).
+    *
+    * Each task with failures writes its FAIL lines to one `part-NNNNN`
+    * text file, published by the executeOne pattern (attempt-unique tmp
+    * then rename) through [[DstFileSystem.taskPrivate]]; no output
+    * committer, no `.crc` sidecars.
     */
   def writeFailureLog(spark: SparkSession, dst: String, status: Dataset[ExecStatus]): Path = {
-    import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
     val dstPath = new Path(dst)
     val fs = dstPath.getFileSystem(conf)
@@ -284,8 +282,23 @@ object DistExecJob {
     val logPath =
       if (fs.exists(dstPath) && fs.getFileStatus(dstPath).isDirectory) new Path(dstPath, name)
       else new Path(dstPath.getParent, name)
-    status.filter(s => !s.ok).map(_.error)
-      .write.mode("overwrite").text(logPath.toString)
+    fs.mkdirs(logPath)
+    val confEntries = Manifest.hadoopConfEntries(conf)
+    val logStr = logPath.toString
+    status.rdd.foreachPartition { (it: Iterator[ExecStatus]) =>
+      val fails = it.filter(!_.ok)
+      if (fails.hasNext) {
+        val root = new Path(logStr)
+        val taskFs = DstFileSystem.taskPrivate(logStr, Manifest.restoreConf(confEntries))
+        val part = f"part-${TaskContext.getPartitionId()}%05d"
+        // '_'-prefixed: readers of the log dir skip a tmp a killed task left
+        val tmp = new Path(root, s"_tmp_${part}_${taskAttempt()}")
+        val out = taskFs.create(tmp, true)
+        try fails.foreach(s => out.write(s"${s.error}\n".getBytes(StandardCharsets.UTF_8)))
+        finally out.close()
+        rename(taskFs, tmp, new Path(root, part))
+      }
+    }
     logPath
   }
 

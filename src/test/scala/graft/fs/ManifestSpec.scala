@@ -60,6 +60,21 @@ class ManifestSpec extends AnyFunSuite with SparkSpec {
     assert(ex.getMessage.contains("a.txt"))
   }
 
+  test("duplicate message: the first 20 names in sorted order, each with its sorted sources") {
+    val roots = Seq.fill(2)(Files.createTempDirectory("graft-manifest-dup"))
+    // written in reverse so neither listing nor hashing hands back sorted order
+    for (r <- roots; i <- 24 to 0 by -1) Files.writeString(r.resolve(f"d$i%02d.txt"), s"$i\n")
+    Files.writeString(roots.head.resolve("only.txt"), "unique\n")
+    val m = Manifest.build(spark, roots.map(_.toString), special = true)
+    val srcs = m.collect().filter(!_.isDir).groupBy(_.relativeDst).map { case (k, es) =>
+      k -> es.map(_.path).sorted.toSeq }
+    val want = (0 until 20).map(i => f"d$i%02d.txt")
+      .map(n => s"$n <- ${srcs(n).mkString(", ")}").mkString("; ")
+    val ex = intercept[DuplicationException](Manifest.checkDuplication(m))
+    assert(ex.getMessage == s"duplicate destination names: $want")
+    assert(srcs.values.filter(_.size > 1).forall(_.size == 2) && srcs("only.txt").size == 1)
+  }
+
   test("no exception when destinations are unique") {
     val root = mkTree()
     Manifest.checkDuplication(Manifest.build(spark, Seq(root.toString)))

@@ -6,6 +6,9 @@ import java.nio.file.{Files, Path => JPath}
 import scala.jdk.CollectionConverters._
 
 import graft.SparkSpec
+import graft.fs.{DuplicationException, Manifest}
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 class DistExecJobSpec extends AnyFunSuite with SparkSpec {
@@ -246,6 +249,65 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
     assert(logPath.getParent.toUri.getPath == dst.toString, "log dir sits inside the dst dir")
     val lines = spark.read.textFile(logPath.toString).collect()
     assert(lines.length == 3 && lines.forall(_.startsWith("FAIL ")))
+  }
+
+  test("failure log with no failures: the dir exists, reads 0 lines, nothing else left") {
+    val src = mkTree()
+    val dst = tmpDst()
+    val status = DistExecJob.run(spark, Seq(src.toString), dst.toString, "cat")
+    val logPath = DistExecJob.writeFailureLog(spark, dst.toString, status)
+    assert(Files.isDirectory(dst.resolve(logPath.getName)))
+    assert(spark.read.textFile(logPath.toString).count() == 0)
+    val names = walk(dst).map(p => dst.relativize(p).toString)
+    assert(!names.exists(n => n.contains("_temporary") || n.contains("_tmp") || n.endsWith(".crc")),
+      names)
+  }
+
+  test("exact placement: 8 equal-size files at maxMaps 8 give every task one file") {
+    val src = Files.createTempDirectory("graft-exec-place")
+    (0 until 8).foreach(i => Files.writeString(src.resolve(s"f$i.txt"), "0123456789\n"))
+    val dst = tmpDst()
+    val status = DistExecJob.run(spark, Seq(src.toString), dst.toString, "cat",
+      DistExecOptions(maxMaps = Some(8)))
+    val perTask = status.rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
+    assert(perTask == Seq.fill(8)(1), perTask)
+  }
+
+  test("job budget: run + counters + failure log take at most 6 Spark jobs") {
+    val src = mkTree()
+    val dst = tmpDst()
+    val sc = spark.sparkContext
+    val group = "distexec-job-budget"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job budget")
+    try {
+      val status = DistExecJob.run(spark, Seq(src.toString), dst.toString, "cat")
+      assert(DistExecJob.counters(status).executed == 3)
+      DistExecJob.writeFailureLog(spark, dst.toString, status)
+      ListenerBusAccess.drain(sc)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    assert(jobs.get > 0 && jobs.get <= 6, s"${jobs.get} Spark jobs")
+  }
+
+  test("runManifest on a duplicated manifest throws and leaves dst absent") {
+    val r1 = mkTree()
+    val r2 = mkTree()
+    // special: both trees spill into dst itself, so every file name collides
+    val manifest = Manifest.build(spark, Seq(r1.toString, r2.toString), special = true)
+    val dst = tmpDst()
+    intercept[DuplicationException] {
+      DistExecJob.runManifest(spark, manifest, dst.toString, "cat")
+    }
+    assert(!Files.exists(dst))
   }
 
   test("large payload streams: 32 MB through cat, exact bytes, bounded heap") {
