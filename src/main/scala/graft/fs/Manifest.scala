@@ -95,173 +95,136 @@ object Manifest {
     }
   }
 
-  /** Driver-side iterative DFS over one root (reference's explicit-stack
-    * walk, DistExec.java:549-609). Fine for moderate trees; use
-    * [[listDistributed]] when the fan-out is large.
+  /** Driver-side listing of one root: its own row, then every entry
+    * below it from [[walk]] (the reference's explicit-stack walk,
+    * DistExec.java:549-609). [[listDistributed]] lists the same rows on
+    * executors.
     */
   def listRoot(conf: Configuration, root: String): Seq[FileEntry] = {
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(conf)
-    if (!fs.exists(rootPath))
-      throw new java.io.FileNotFoundException(s"source $root does not exist")
-    val rootStatus = fs.getFileStatus(rootPath)
-    val rootStr = rootStatus.getPath.toString
-    val out = mutable.ArrayBuffer.empty[FileEntry]
-    val stack = mutable.Stack[FileStatus](rootStatus)
-    while (stack.nonEmpty) {
-      val st = stack.pop()
-      val p = st.getPath.toString
-      val rel = makeRelative(rootStr, p).getOrElse(p)
-      out += toEntry(st, rootStr, rel)
-      if (st.isDirectory) fs.listStatus(st.getPath).foreach(stack.push)
-    }
-    out.toSeq
+    val (fs, st) = rootStatus(conf, root)
+    val r = st.getPath.toString
+    val below = if (st.isDirectory) walk(fs, st.getPath, r) else Iterator.empty
+    (Iterator.single(entry(st, r)) ++ below).toVector
   }
+
+  private def rootStatus(conf: Configuration, root: String): (FileSystem, FileStatus) = {
+    val p = new Path(root)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p))
+      throw new java.io.FileNotFoundException(s"source $root does not exist")
+    (fs, fs.getFileStatus(p))
+  }
+
+  /** Depth-first walk with an explicit stack: every entry below `dir`,
+    * not `dir` itself. A directory is listed when its row is reached.
+    */
+  private def walk(fs: FileSystem, dir: Path, root: String): Iterator[FileEntry] =
+    new Iterator[FileEntry] {
+      private val stack = mutable.Stack.empty[FileStatus].pushAll(fs.listStatus(dir))
+      def hasNext: Boolean = stack.nonEmpty
+      def next(): FileEntry = {
+        val st = stack.pop()
+        if (st.isDirectory) stack.pushAll(fs.listStatus(st.getPath))
+        entry(st, root)
+      }
+    }
 
   // Paths keep their FULL URI (scheme + authority): stripping to the bare
   // path would make executors resolve a source from hdfs://nn/... or
   // s3a://bucket/... against their DEFAULT filesystem (the reference
   // preserved qualified URIs for the same reason).
-  private def toEntry(st: FileStatus, root: String, rel: String): FileEntry =
+  private def entry(st: FileStatus, root: String): FileEntry = {
+    val p = st.getPath.toString
     FileEntry(
-      path = st.getPath.toString,
+      path = p,
       root = root,
-      relativeDst = rel,
+      relativeDst = makeRelative(root, p).getOrElse(p),
       length = if (st.isDirectory) 0L else st.getLen,
       isDir = st.isDirectory,
       modificationTime = st.getModificationTime)
-
-  /** Rewrite a root's entries so the tree mirrors under the SOURCE'S OWN
-    * NAME (the reference's non-special root choice: `root =
-    * src.getParent()`, DistExec.java:553 — each of several sources lands
-    * at `dst/<srcname>/...`, and a rerun into an existing dst nests
-    * rather than merging namespaces). A single-file root becomes its file
-    * name either way.
-    */
-  private def underSourceNameEntry(e: FileEntry): FileEntry = {
-    val name = new Path(e.root).getName
-    if (name.isEmpty) e // root is "/" — nothing to nest under
-    else if (e.relativeDst == ".") e.copy(relativeDst = name)
-    else e.copy(relativeDst = s"$name/${e.relativeDst}")
   }
 
-  private def underSourceName(es: Seq[FileEntry]): Seq[FileEntry] =
-    es.map(underSourceNameEntry)
-
-  /** Build the manifest for several roots (multiple `<srcurl>` args are an
-    * implicit union — reference DistExec.java:549 loop).
-    *
-    * Root choice mirrors the reference (DistExec.java:546-553): in the
+  /** Root choice mirrors the reference (DistExec.java:546-553): in the
     * `special` case (exactly one source into a nonexistent dst) a
     * directory source's CONTENTS land in dst directly; otherwise each
-    * source is relativized against its parent, i.e. mirrors under
-    * `dst/<srcname>/...`. A single-file root contributes its file name in
-    * both modes.
+    * source is relativized against its parent (`root =
+    * src.getParent()`, DistExec.java:553), i.e. mirrors under
+    * `dst/<srcname>/...`, so several sources, or a rerun into an existing
+    * dst, keep disjoint namespaces. A single-file root contributes its
+    * file name in both modes.
+    */
+  private def placed(e: FileEntry, special: Boolean): FileEntry =
+    if (special) {
+      if (e.relativeDst == "." && !e.isDir) e.copy(relativeDst = new Path(e.path).getName) else e
+    } else {
+      val name = new Path(e.root).getName
+      if (name.isEmpty) e // root is "/" — nothing to nest under
+      else if (e.relativeDst == ".") e.copy(relativeDst = name)
+      else e.copy(relativeDst = s"$name/${e.relativeDst}")
+    }
+
+  /** Build the manifest for several roots on the driver (multiple
+    * `<srcurl>` args are an implicit union — reference DistExec.java:549
+    * loop), placed by the `special` rule of [[placed]].
     */
   def build(spark: SparkSession, roots: Seq[String], special: Boolean = true): Dataset[FileEntry] = {
     import spark.implicits._
     val conf = spark.sparkContext.hadoopConfiguration
-    val entries = roots.flatMap { r =>
-      val es = listRoot(conf, r)
-      if (!special) underSourceName(es)
-      else
-        // A single-FILE root contributes itself under its file name.
-        es.map { e =>
-          if (e.relativeDst == "." && !e.isDir)
-            e.copy(relativeDst = new Path(e.path).getName)
-          else e
-        }
-    }
-    spark.createDataset(entries)
+    spark.createDataset(roots.flatMap(listRoot(conf, _)).map(placed(_, special)))
   }
 
-  /** Distributed breadth-first listing: each wave lists its directories on
-    * executors. This removes the reference's driver-side listing
-    * bottleneck (single-threaded stack walk, DistExec.java:558-608) for
-    * 100 TB-scale trees with wide fan-out.
+  /** The rows of [[build]], listed on executors in ONE Spark job: the
+    * reference lists on the driver (DistExec.java:558-608), which
+    * serializes on one thread for trees with wide fan-out.
     *
-    * The directory frontier stays a DATASET between waves — the driver
-    * never sees path strings, only one count per wave (a tree with
-    * millions of directories per level would otherwise funnel every path
-    * through the driver between waves). Each wave's output is
-    * checkpointed, so wave N's lineage does not replay waves 1..N−1, and
-    * the frontier repartitions by path so listing fan-out spreads across
-    * executors regardless of which wave produced the paths.
+    * The driver stats each root (emitting the root's own row) and expands
+    * directories breadth-first, keeping directory statuses only, until
+    * the frontier holds `4 × defaultParallelism` directories or the tree
+    * runs out. The job then lists each expanded directory shallowly (its
+    * children) and walks each frontier directory depth-first (everything
+    * below it), spread round-robin over at most `4 × defaultParallelism`
+    * partitions, so every entry is listed exactly once. The result is
+    * checkpointed, so every pass over it reads the same rows.
     */
-  def listDistributed(spark: SparkSession, roots: Seq[String], maxWaves: Int = 64,
+  def listDistributed(spark: SparkSession, roots: Seq[String],
       special: Boolean = true): Dataset[FileEntry] = {
     import spark.implicits._
-    val conf = spark.sparkContext.hadoopConfiguration
+    val sc = spark.sparkContext
+    val conf = sc.hadoopConfiguration
+    val width = 4 * math.max(1, sc.defaultParallelism)
+    val rootStats = roots.map { r =>
+      val st = rootStatus(conf, r)._2
+      (st, st.getPath.toString)
+    }
+    val own = rootStats.map { case (st, root) => placed(entry(st, root), special) }
+    // (directory, its root): the job lists it shallowly, or walks below it
+    var frontier = rootStats.collect { case (st, root) if st.isDirectory => (st.getPath, root) }
+    val expanded = mutable.ArrayBuffer.empty[(Path, String)]
+    while (frontier.nonEmpty && frontier.size < width) {
+      expanded ++= frontier
+      frontier = frontier.flatMap { case (dir, root) =>
+        dir.getFileSystem(conf).listStatus(dir).iterator
+          .filter(_.isDirectory).map(st => (st.getPath, root))
+      }
+    }
+    val tasks = frontier.map { case (d, r) => (d.toString, r, true) } ++
+      expanded.map { case (d, r) => (d.toString, r, false) }
+    val n = math.max(1, math.min(width, tasks.size))
+    val slices = (0 until n).map(i => (i until tasks.size by n).map(tasks))
     // Executors must see the driver's effective Hadoop config (FS
     // credentials, defaultFS, spark.hadoop.* overrides) — a bare
     // `new Configuration()` would load classpath defaults only.
     val confEntries = hadoopConfEntries(conf)
-    val parallelism = math.max(1, spark.sparkContext.defaultParallelism)
-    def listWave(frontier: Dataset[(String, String)]): Dataset[FileEntry] = frontier
-      .repartition(parallelism, col("_1"))
-      .mapPartitions { it =>
-        val c = restoreConf(confEntries)
-        it.flatMap { case (dir, root) =>
-          val p = new Path(dir)
-          val fs = p.getFileSystem(c)
-          val self = fs.getFileStatus(p)
-          val selfEntry = toEntry(self, root, makeRelative(root, dir).getOrElse(dir))
-          if (!self.isDirectory) Iterator(selfEntry)
-          else Iterator(selfEntry) ++ fs.listStatus(p).iterator.map { st =>
-            val cp = st.getPath.toString
-            toEntry(st, root, makeRelative(root, cp).getOrElse(cp))
-          }
-        }
+    val rows = sc.parallelize(slices, n).mapPartitionsWithIndex { (i, it) =>
+      val c = restoreConf(confEntries)
+      val listed = it.flatMap(_.iterator).flatMap { case (d, root, deep) =>
+        val dir = new Path(d)
+        val fs = dir.getFileSystem(c)
+        if (deep) walk(fs, dir, root) else fs.listStatus(dir).iterator.map(entry(_, root))
       }
-    // Seed frontier: the roots themselves (driver-side stat only, cheap).
-    val seed: Seq[(String, String)] = roots.map { r =>
-      val p = new Path(r)
-      val fs = p.getFileSystem(conf)
-      val q = fs.getFileStatus(p).getPath.toString
-      (q, q)
+      (if (i == 0) own.iterator else Iterator.empty) ++ listed.map(placed(_, special))
     }
-    var frontier = spark.createDataset(seed)
-    var frontierSize = seed.size.toLong
-    var acc = spark.emptyDataset[FileEntry]
-    val intermediates = mutable.ArrayBuffer.empty[Dataset[_]]
-    var waves = 0
-    while (frontierSize > 0 && waves < maxWaves) {
-      val persisted = listWave(frontier).localCheckpoint(true)
-      intermediates += persisted
-      acc = acc.union(persisted)
-      // Next frontier: directories DISCOVERED this wave (children only —
-      // a wave's own input dirs re-appear as selfEntry rows, subtracted
-      // by the except; a child dir enters the frontier exactly once
-      // since trees have no cycles).
-      frontier = persisted
-        .filter(e => e.isDir)
-        .map(e => (e.path, e.root))
-        .except(frontier)
-        .localCheckpoint(true)
-      intermediates += frontier
-      frontierSize = frontier.count() // ONE number to the driver per wave
-      waves += 1
-    }
-    // Truncation must be LOUD: files below the depth cap would silently
-    // vanish from the manifest (and the exec job) otherwise.
-    if (frontierSize > 0)
-      throw new IllegalStateException(
-        s"tree deeper than maxWaves=$maxWaves; $frontierSize director(ies) unlisted — raise maxWaves")
-    // Same root-choice semantics as [[build]]: nest under the source name
-    // unless this is the special single-src-into-new-dst job; a
-    // single-FILE root contributes its file name either way.
-    val isSpecial = special
-    val fixed = acc.map { e =>
-      if (!isSpecial) underSourceNameEntry(e)
-      else if (e.relativeDst == "." && !e.isDir)
-        e.copy(relativeDst = new Path(e.path).getName)
-      else e
-    }
-    // Dirs appear both as a wave input and as their parent's child row.
-    // Materialize (lineage-truncated), then release the per-wave blocks.
-    val result = fixed.dropDuplicates("path", "root").localCheckpoint(true)
-    intermediates.foreach(_.unpersist())
-    result
+    spark.createDataset(rows).localCheckpoint(true)
   }
 
   /** Driver-side snapshot of a Hadoop Configuration as serializable pairs. */

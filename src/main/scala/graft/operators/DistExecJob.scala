@@ -52,8 +52,8 @@ final case class DistExecOptions(
   *    DistExec.java:443-445);
   *  - streams the source file through the child process (never
   *    materializes it in memory — no `binaryFile` 2 GB limit);
-  *  - distributed listing available for wide trees
-  *    ([[Manifest.listDistributed]]);
+  *  - a manifest can be listed on executors in one Spark job for wide
+  *    trees ([[Manifest.listDistributed]]);
   *  - a local destination is written through
   *    [[graft.fs.DirectModeLocalFileSystem]], not the stock local
   *    filesystem, because without libhadoop the stock one forks a
@@ -113,13 +113,14 @@ object DistExecJob {
   }
 
   /** Run over a pre-built manifest — pass [[Manifest.listDistributed]]'s
-    * output here when the tree is too wide for driver-side listing.
+    * output here when the tree is too wide to list on the driver.
     * IMPORTANT: build the manifest with the SAME `special` value
     * [[run]] would compute ([[manifestSpecial]]) or the root-choice
     * semantics (nest under dst/<srcname> vs contents-into-dst) will not
     * match the reference's. The manifest is read by each pass (planning,
     * directories, exec), so it must read the same rows every time, as the
-    * outputs of [[Manifest.build]] and [[Manifest.listDistributed]] do.
+    * outputs of [[Manifest.build]] (rows held on the driver) and
+    * [[Manifest.listDistributed]] (checkpointed once) do.
     */
   def runManifest(
       spark: SparkSession,

@@ -125,28 +125,4 @@ class PipelineSpec extends AnyFunSuite with SparkSpec {
     val bad = back.filter(col("clen") > w || col("clen") < 1).count()
     assert(bad == 0)
   }
-
-  test("curate -> attested snapshot -> validate -> consume composes") {
-    import graft.sources.SnapshotManifest
-    val docs = graft.queries.Tables.load(spark, "/root/testdata/sf0.001", "documents")
-
-    // Stage 1: the c17 keep gate.
-    val kept = TextAnalysis.qualityDecisions(docs)
-      .filter(col("reason") === "keep").drop("reason")
-
-    // Stage 2: hand-off as an attested snapshot.
-    val dir = java.nio.file.Files.createTempDirectory("pipe-snap").toFile.getAbsolutePath
-    SnapshotManifest.write(kept, col("doc_id"), 4, dir)
-
-    // Stage 3: the consumer's handshake — validate BEFORE reading.
-    val v = SnapshotManifest.validate(spark, dir).collect()
-    assert(v.nonEmpty && v.forall(_.getAs[Boolean]("ok")),
-      s"fresh snapshot must validate clean: ${v.mkString(", ")}")
-
-    // Stage 4: consumption sees exactly the curated corpus.
-    val back = spark.read.parquet(s"$dir/data")
-    assert(back.select("doc_id").collect().map(_.getLong(0)).toSet ==
-      kept.select("doc_id").collect().map(_.getLong(0)).toSet,
-      "snapshot must round-trip the curated corpus")
-  }
 }

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[ScaleSmoke]]): every gated query runs on sf0.01 and on 10
   * key-disjoint sf0.01 replicas (ScaleSmoke.build — same disjointness
   * and token/embedding salting discipline as the r6 evidence run,
-  * scale_smoke_r6.log), and the best-of-2 time ratio must stay inside
+  * history/scale_smoke_r6.log), and the best-of-2 time ratio must stay inside
   * its pinned band. A query whose plan goes quadratic in the data shows
   * a 10×-data ratio of ~30+ even at this size (the quadratic term grows
   * ×100 while fixed overhead stays put); the linear plans measure ~1–6
@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * catch a superlinear regression without flaking on scheduler noise.
   *
   * Threshold provenance: calibrated on this suite's own session (see
-  * per-query comments; sf0.1-scale evidence in scale_smoke_r6.log and
+  * per-query comments; sf0.1-scale evidence in history/scale_smoke_r6.log and
   * PERF.md §scale). `SPARK_GRAFT_SKIP_SCALE_GATE=1` skips the gate
   * (for contended boxes where timing assertions are meaningless) — the
   * driver's test runs leave it unset.
@@ -43,7 +43,7 @@ class ScaleGateSpec extends AnyFunSuite with SparkSpec {
                                     // carried 4–5× headroom over cal —
                                     // r12 verdict item 5). NB the
                                     // sf0.1-SCALE banded ratio is ~6.5
-                                    // (scale_smoke_r12.log) but THIS
+                                    // (history/scale_smoke_r12.log) but THIS
                                     // gate runs at sf0.01 where cal is
                                     // 1.9–2.5 — the band guards this
                                     // measurement, not that one
@@ -110,7 +110,7 @@ class ScaleGateSpec extends AnyFunSuite with SparkSpec {
     * above HierThreshold, keeping the 10×-data/10×-cells step bounded.
     * Expected ≈ 10 (linear) with the compiled-method CodebookModel
     * assignment (see ScaleSmoke scaladoc); the flat path measured 174×
-    * (scale_smoke_r6.log) and the unrolled-literal-tree form ~54× (the
+    * (history/scale_smoke_r6.log) and the unrolled-literal-tree form ~54× (the
     * Janino compile bomb, r7).
     */
   test("c12 IVF at 10x data + 10x cells rides the hierarchical quantizer") {

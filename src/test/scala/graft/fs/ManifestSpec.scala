@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path => JPath}
 import java.nio.charset.StandardCharsets.UTF_8
 
 import graft.SparkSpec
+import org.apache.spark.ListenerBusAccess
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
@@ -45,11 +46,43 @@ class ManifestSpec extends AnyFunSuite with SparkSpec {
     assert(m.head.relativeDst == "a.txt" && !m.head.isDir)
   }
 
+  private def sameRows(roots: Seq[JPath], special: Boolean = true): Unit = {
+    val rs = roots.map(_.toString)
+    def rows(ds: org.apache.spark.sql.Dataset[FileEntry]) =
+      ds.collect().toSeq.sortBy(e => (e.root, e.path))
+    assert(rows(Manifest.listDistributed(spark, rs, special = special)) == rows(Manifest.build(spark, rs, special)))
+  }
+
   test("distributed listing matches driver-side listing") {
     val root = mkTree()
-    val drv = Manifest.build(spark, Seq(root.toString)).collect().map(_.path).sorted
-    val dist = Manifest.listDistributed(spark, Seq(root.toString)).collect().map(_.path).sorted
-    assert(dist.toSeq == drv.toSeq)
+    sameRows(Seq(root))
+    // skewed: one top directory with more subdirectories than the job has partitions
+    val skewed = Files.createTempDirectory("graft-manifest-skew")
+    for (i <- 0 until 4 * spark.sparkContext.defaultParallelism + 3) {
+      val d = Files.createDirectories(skewed.resolve(s"top/d$i"))
+      Files.writeString(d.resolve("f.txt"), s"$i\n")
+    }
+    sameRows(Seq(skewed))
+    sameRows(Seq(mkTree(), mkTree()), special = false)
+    sameRows(Seq(root.resolve("a.txt")))
+  }
+
+  test("distributed listing of a three-level tree takes at most 2 Spark jobs") {
+    val root = mkTree()
+    val jobs = ListenerBusAccess.jobCount(spark.sparkContext) {
+      assert(Manifest.listDistributed(spark, Seq(root.toString)).collect().length == 7)
+    }
+    assert(jobs > 0 && jobs <= 2, s"$jobs Spark jobs")
+  }
+
+  test("distributed listing of a 70-level directory chain is complete") {
+    val root = Files.createTempDirectory("graft-manifest-chain")
+    val leaf = (0 until 70).foldLeft(root)((d, i) => d.resolve(s"d$i"))
+    Files.createDirectories(leaf)
+    Files.writeString(leaf.resolve("leaf.txt"), "leaf\n")
+    val m = Manifest.listDistributed(spark, Seq(root.toString)).collect()
+    assert(m.length == 72 && m.count(!_.isDir) == 1)
+    sameRows(Seq(root))
   }
 
   test("duplicate destinations across roots raise DuplicationException") {

@@ -8,7 +8,6 @@ import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 import graft.fs.{DuplicationException, Manifest}
 import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 class DistExecJobSpec extends AnyFunSuite with SparkSpec {
@@ -276,26 +275,12 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
   test("job budget: run + counters + failure log take at most 6 Spark jobs") {
     val src = mkTree()
     val dst = tmpDst()
-    val sc = spark.sparkContext
-    val group = "distexec-job-budget"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job budget")
-    try {
+    val jobs = ListenerBusAccess.jobCount(spark.sparkContext) {
       val status = DistExecJob.run(spark, Seq(src.toString), dst.toString, "cat")
       assert(DistExecJob.counters(status).executed == 3)
       DistExecJob.writeFailureLog(spark, dst.toString, status)
-      ListenerBusAccess.drain(sc)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
     }
-    assert(jobs.get > 0 && jobs.get <= 6, s"${jobs.get} Spark jobs")
+    assert(jobs > 0 && jobs <= 6, s"$jobs Spark jobs")
   }
 
   test("runManifest on a duplicated manifest throws and leaves dst absent") {
