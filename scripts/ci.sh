@@ -17,6 +17,13 @@ done
 echo "=== perfbench harness self-tests ==="
 python3 perfbench/run.py --test
 
+echo "=== exec_small smoke ==="
+# the last stdout line is the run's JSON verdict; fail unless every file
+# came out right
+python3 perfbench/run.py --workload exec_small --seed 1 --seconds 10 --trace 0 2>/dev/null \
+  | tail -1 | python3 -c 'import json, sys; r = json.loads(sys.stdin.read()); print(r)
+sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)'
+
 if [ "${1:-}" != "--quick" ]; then
   echo "=== bench sf0.1 ==="
   # Bench reads sf0.1 by default (SPARK_GRAFT_SF_DIR unset)

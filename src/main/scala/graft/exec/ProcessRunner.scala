@@ -116,6 +116,11 @@ object ExitPolicy {
 
   def accepts(argv: Seq[String], exitCode: Int): Boolean =
     exitCode == 0 || (exitCode == 1 && argv.nonEmpty && GrepLike.matches(argv.head))
+
+  /** Throws [[IOException]] on an exit code [[accepts]] rejects. */
+  def check(argv: Seq[String], exitCode: Int): Unit =
+    if (!accepts(argv, exitCode))
+      throw new IOException(s"Process '${argv.mkString(" ")}' exited with status $exitCode")
 }
 
 /** One execution: tokenize the command line, run it, apply the exit-code
@@ -131,9 +136,7 @@ object Executor {
       redirectErrorToOut: Boolean = false): ExecResult = {
     val argv = CommandLine.translate(commandLine)
     val res = ProcessRunner.run(argv, stdin, stdout, stderr, redirectErrorToOut)
-    if (!ExitPolicy.accepts(argv, res.exitCode))
-      throw new IOException(
-        s"Process '${argv.mkString(" ")}' exited with status ${res.exitCode}")
+    ExitPolicy.check(argv, res.exitCode)
     res
   }
 }

@@ -49,4 +49,10 @@ object DstFileSystem {
     }
     fs
   }
+
+  /** Whether `fs` is the local instance [[taskPrivate]] makes. */
+  def isDirectLocal(fs: FileSystem): Boolean = fs match {
+    case l: LocalFileSystem => l.getRaw.isInstanceOf[DirectModeLocalFileSystem]
+    case _ => false
+  }
 }

@@ -2,17 +2,24 @@ package graft.operators
 
 import java.io.{IOException, OutputStream}
 import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, NoSuchFileException, Paths, StandardCopyOption, Path => JPath}
 
-import graft.exec.{CommandLine, Executor}
+import graft.exec.{CommandLine, Executor, ExitPolicy, ShellHelper}
 import graft.fs.{DstFileSystem, FileEntry, Manifest, ModPartitioner}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Dataset, SparkSession}
 
 /** Per-file execution outcome (reference's FAIL log rows + counters,
   * ExecFilesMapper.java:27,184-187, re-expressed as a status Dataset).
+  * `bytesOut` and `bytesErr` are the lengths of what the child wrote.
+  * `bytesIn` is the source's listed length on the local path (see
+  * [[DistExecJob.TaskExec]]), also when the child stops reading early
+  * (`head -c 1`, `grep -m`); on the pump path it counts the bytes the
+  * child read, fewer for such a child. A FAIL row counts 0 bytes.
   */
 final case class ExecStatus(
     relativeDst: String,
@@ -23,6 +30,10 @@ final case class ExecStatus(
     bytesErr: Long,
     error: String)
 
+/** The reference's four counters: `bytesExecuted` sums the OK rows'
+  * `bytesIn` (source lengths on the local path, see [[ExecStatus]]),
+  * `bytesWritten` their `bytesOut`.
+  */
 final case class ExecCounters(executed: Long, failed: Long, bytesExecuted: Long, bytesWritten: Long)
 
 final case class DistExecOptions(
@@ -50,8 +61,12 @@ final case class DistExecOptions(
   *  - tmp paths are task-attempt-unique + atomic rename, so speculative
   *    execution is SAFE here (the reference had to disable it,
   *    DistExec.java:443-445);
-  *  - streams the source file through the child process (never
-  *    materializes it in memory — no `binaryFile` 2 GB limit);
+  *  - never materializes a file in memory (no `binaryFile` 2 GB
+  *    limit). A file whose source and destination are both local runs
+  *    with kernel redirects from a per-task `sh` ([[ShellHelper]]), so
+  *    no byte passes through the JVM and no child forks from it; any
+  *    other file is streamed through the child by [[graft.exec.ProcessRunner]]'s
+  *    pump threads ([[TaskExec]]);
   *  - a manifest can be listed on executors in one Spark job for wide
   *    trees ([[Manifest.listDistributed]]);
   *  - a local destination is written through
@@ -184,9 +199,14 @@ object DistExecJob {
     val isSpecial = special
     val statuses = byTask.mapPartitions { it =>
       val taskConf = Manifest.restoreConf(confEntries)
-      val attempt = taskAttempt()
       val dstFsTask = DstFileSystem.taskPrivate(dstStr, taskConf)
-      it.map(e => executeOne(taskConf, dstFsTask, e, dstStr, tmpRootStr, attempt, cmd, redirect, isSpecial))
+      // started at the task's first local file; killed, with every
+      // process it started, when the task ends however it ends
+      val shell = new ShellHelper
+      TaskContext.get().addTaskCompletionListener[Unit](_ => shell.close())
+      val exec = new TaskExec(taskConf, dstFsTask, dstStr, tmpRootStr, taskAttempt(),
+        cmd, redirect, isSpecial, shell)
+      it.map(exec.executeOne)
     }
 
     // Eager + lineage-truncated: re-running the returned Dataset must NOT
@@ -253,7 +273,7 @@ object DistExecJob {
             } finally in.close()
           }
         } finally out.close()
-        // Atomic publish, same pattern as executeOne: attempt-unique tmp
+        // Atomic publish, same pattern as TaskExec: attempt-unique tmp
         // then rename, so a speculative/retried merge task never
         // interleaves with a competing writer.
         val target = new Path(root, "_singleout")
@@ -271,7 +291,7 @@ object DistExecJob {
     * reference's job-output dir always exists).
     *
     * Each task with failures writes its FAIL lines to one `part-NNNNN`
-    * text file, published by the executeOne pattern (attempt-unique tmp
+    * text file, published by the TaskExec pattern (attempt-unique tmp
     * then rename) through [[DstFileSystem.taskPrivate]]; no output
     * committer, no `.crc` sidecars.
     */
@@ -331,57 +351,137 @@ object DistExecJob {
     def created: Boolean = out != null
   }
 
-  // private[operators] so DistExecJobSpec can race two attempts of the
-  // same file head-on (the speculation scenario) without reflection
-  private[operators] def executeOne(
+  /** One task attempt's per-file exec, two ways:
+    *  - local, when the source is `file:` and `dstFs` is the local
+    *    instance [[DstFileSystem.taskPrivate]] makes: `shell` runs the
+    *    child with kernel redirects from the source into the flat tmp
+    *    files `<tmpRoot>/<attempt>/<n>` and `<n>.stderr`, each published
+    *    by one `rename(2)`;
+    *  - pumped, for every other file: [[Executor]] streams the source
+    *    through the child into `<tmpRoot>/<attempt>/<relativeDst>`,
+    *    published through `dstFs`.
+    * Either way an empty stream makes no file, a rejected exit code or
+    * any error is a FAIL row, and the file's tmp files are removed.
+    * private[operators] so DistExecJobSpec can drive one attempt, or
+    * race two attempts of the same file (the speculation scenario).
+    */
+  private[operators] final class TaskExec(
       conf: Configuration,
       dstFs: FileSystem,
-      e: FileEntry,
       dst: String,
       tmpRoot: String,
       attempt: String,
       command: String,
       redirectErrorToOut: Boolean,
-      special: Boolean): ExecStatus = {
-    val srcPath = new Path(e.path)
-    val dstFile =
-      if (special) new Path(dst)
-      else new Path(new Path(dst), e.relativeDst)
-    val tmpFile = new Path(new Path(tmpRoot, attempt), e.relativeDst)
-    val tmpErr = tmpFile.suffix(".stderr")
-    try {
-      val srcFs = srcPath.getFileSystem(conf)
-      val in = srcFs.open(srcPath)
-      val out = new LazyOut(dstFs, tmpFile)
-      val err = new LazyOut(dstFs, tmpErr)
-      val res =
-        try Executor.execute(command, in, out, err, redirectErrorToOut)
-        finally {
-          try in.close() catch { case _: IOException => () }
-          // err closes even when out's close throws (else its stream and
-          // tmp file handle leak); the throw still fails the file
-          try out.close() finally err.close()
-        }
-      // Atomic publish: delete-existing + rename tmp→dst, per stream
-      // (reference rename, ExecFilesMapper.java:156-170). No tmp ⇒ no file.
-      if (out.created) rename(dstFs, tmpFile, dstFile)
-      if (err.created) rename(dstFs, tmpErr, dstFile.suffix(".stderr"))
-      ExecStatus(e.relativeDst, ok = true, res.exitCode, res.bytesIn, res.bytesOut, res.bytesErr, null)
-    } catch {
-      case t: Throwable =>
-        // Per-record failure: log + continue; best-effort tmp cleanup with
-        // retries (reference: ExecFilesMapper.java:173-208).
-        var tries = 0
-        while (tries < 3 && (exists(dstFs, tmpFile) || exists(dstFs, tmpErr))) {
-          try { dstFs.delete(tmpFile, false); dstFs.delete(tmpErr, false) }
+      special: Boolean,
+      shell: ShellHelper) {
+    private val argv = CommandLine.translate(command)
+    private val defaultScheme = FileSystem.getDefaultUri(conf).getScheme
+    private val local = DstFileSystem.isDirectLocal(dstFs)
+    private def nio(p: String): JPath = Paths.get(dstFs.makeQualified(new Path(p)).toUri)
+    private lazy val localDst = nio(dst)
+    private lazy val localTmp = nio(tmpRoot).resolve(attempt)
+    // the mode dstFs.create gives a file
+    private val fileMode =
+      FsPermission.getFileDefault.applyUMask(FsPermission.getUMask(conf)).toShort & 0xfff
+    private var n = 0L
+
+    def executeOne(e: FileEntry): ExecStatus = {
+      val src = new Path(e.path)
+      if (local && Option(src.toUri.getScheme).getOrElse(defaultScheme) == "file")
+        executeLocal(e, src.toUri.getPath)
+      else executePumped(e, src)
+    }
+
+    private def executeLocal(e: FileEntry, src: String): ExecStatus = {
+      n += 1
+      val out = localTmp.resolve(n.toString)
+      val err = localTmp.resolve(s"$n.stderr")
+      try {
+        if (n == 1 && !dstFs.mkdirs(new Path(localTmp.toUri)))
+          throw new IOException(s"cannot create $localTmp")
+        val exit = shell.run(argv, src, out.toString, err.toString, redirectErrorToOut)
+        ExitPolicy.check(argv, exit)
+        val to = if (special) localDst else localDst.resolve(e.relativeDst)
+        val bytesOut = publish(out, to)
+        val bytesErr =
+          if (redirectErrorToOut) 0L else publish(err, to.resolveSibling(s"${to.getFileName}.stderr"))
+        ExecStatus(e.relativeDst, ok = true, exit, e.length, bytesOut, bytesErr, null)
+      } catch {
+        case t: Throwable =>
+          try { Files.deleteIfExists(out); Files.deleteIfExists(err) }
           catch { case _: IOException => () }
-          tries += 1
-          if (tries < 3) Thread.sleep(100)
+          failed(e, t)
+      }
+    }
+
+    /** Publish `tmp` at `to` with the umask's mode, by one `rename(2)`
+      * that replaces an existing file; an empty `tmp` is deleted
+      * instead (the reference's no-file-for-empty-output rule).
+      * Returns its size.
+      */
+    private def publish(tmp: JPath, to: JPath): Long = {
+      val attrs = Files.readAttributes(tmp, "unix:size,mode")
+      val size = attrs.get("size").asInstanceOf[Long]
+      if (size == 0L) Files.delete(tmp)
+      else {
+        if ((attrs.get("mode").asInstanceOf[Int] & 0xfff) != fileMode)
+          Files.setAttribute(tmp, "unix:mode", Int.box(fileMode))
+        try Files.move(tmp, to, StandardCopyOption.ATOMIC_MOVE)
+        catch {
+          // only the single-file case's parent can be missing: the
+          // directory job made every other one
+          case _: NoSuchFileException =>
+            dstFs.mkdirs(new Path(to.getParent.toUri))
+            Files.move(tmp, to, StandardCopyOption.ATOMIC_MOVE)
         }
-        ExecStatus(e.relativeDst, ok = false, -1, 0L, 0L, 0L,
-          s"FAIL ${e.relativeDst} : ${t.getClass.getName}: ${t.getMessage}")
+      }
+      size
+    }
+
+    private def executePumped(e: FileEntry, srcPath: Path): ExecStatus = {
+      val dstFile =
+        if (special) new Path(dst)
+        else new Path(new Path(dst), e.relativeDst)
+      val tmpFile = new Path(new Path(tmpRoot, attempt), e.relativeDst)
+      val tmpErr = tmpFile.suffix(".stderr")
+      try {
+        val srcFs = srcPath.getFileSystem(conf)
+        val in = srcFs.open(srcPath)
+        val out = new LazyOut(dstFs, tmpFile)
+        val err = new LazyOut(dstFs, tmpErr)
+        val res =
+          try Executor.execute(command, in, out, err, redirectErrorToOut)
+          finally {
+            try in.close() catch { case _: IOException => () }
+            // err closes even when out's close throws (else its stream and
+            // tmp file handle leak); the throw still fails the file
+            try out.close() finally err.close()
+          }
+        // Atomic publish: delete-existing + rename tmp→dst, per stream
+        // (reference rename, ExecFilesMapper.java:156-170). No tmp ⇒ no file.
+        if (out.created) rename(dstFs, tmpFile, dstFile)
+        if (err.created) rename(dstFs, tmpErr, dstFile.suffix(".stderr"))
+        ExecStatus(e.relativeDst, ok = true, res.exitCode, res.bytesIn, res.bytesOut, res.bytesErr, null)
+      } catch {
+        case t: Throwable =>
+          // Per-record failure: log + continue; best-effort tmp cleanup with
+          // retries (reference: ExecFilesMapper.java:173-208).
+          var tries = 0
+          while (tries < 3 && (exists(dstFs, tmpFile) || exists(dstFs, tmpErr))) {
+            try { dstFs.delete(tmpFile, false); dstFs.delete(tmpErr, false) }
+            catch { case _: IOException => () }
+            tries += 1
+            if (tries < 3) Thread.sleep(100)
+          }
+          failed(e, t)
+      }
     }
   }
+
+  private def failed(e: FileEntry, t: Throwable): ExecStatus =
+    ExecStatus(e.relativeDst, ok = false, -1, 0L, 0L, 0L,
+      s"FAIL ${e.relativeDst} : ${t.getClass.getName}: ${t.getMessage}")
 
   private def exists(fs: FileSystem, p: Path): Boolean =
     try fs.exists(p) catch { case _: IOException => false }

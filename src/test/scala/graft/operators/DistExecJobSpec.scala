@@ -1,16 +1,56 @@
 package graft.operators
 
 import java.io.IOException
+import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path => JPath}
 
 import scala.jdk.CollectionConverters._
+import scala.jdk.OptionConverters._
 
 import graft.SparkSpec
-import graft.fs.{DuplicationException, Manifest}
+import graft.exec.ShellHelper
+import graft.fs.{DstFileSystem, DuplicationException, FileEntry, Manifest}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{LocalFileSystem, RawLocalFileSystem}
 import org.apache.spark.ListenerBusAccess
 import org.scalatest.funsuite.AnyFunSuite
 
 class DistExecJobSpec extends AnyFunSuite with SparkSpec {
+
+  /** `p` on the `pumplocal:` scheme ([[PumpLocalFileSystem]]): a job
+    * over it writes through no local instance of
+    * [[DstFileSystem.taskPrivate]], so every file takes the pump path.
+    */
+  private def viaPump(p: JPath): String = {
+    spark.sparkContext.hadoopConfiguration.set("fs.pumplocal.impl", classOf[PumpLocalFileSystem].getName)
+    s"pumplocal:$p"
+  }
+
+  /** A case run on both exec paths: as `name` over plain local paths
+    * (the local path) and as `name (pump path)` over [[viaPump]] ones.
+    */
+  private def bothPaths(name: String)(body: (JPath => String) => Unit): Unit = {
+    test(name)(body(_.toString))
+    test(s"$name (pump path)")(body(viaPump))
+  }
+
+  /** The live shell helpers this JVM started. */
+  private def helpers(): Seq[ProcessHandle] =
+    ProcessHandle.current().descendants().iterator().asScala
+      .filter(_.info().arguments().toScala.exists(_.contains(ShellHelper.Script))).toSeq
+
+  /** One local-path task attempt writing under `dst`, as runManifest makes it. */
+  private def taskExec(dst: JPath, command: String, shell: ShellHelper,
+      attempt: String = "0-1"): DistExecJob.TaskExec = {
+    val conf = new Configuration()
+    new DistExecJob.TaskExec(conf, DstFileSystem.taskPrivate(dst.toString, conf), dst.toString,
+      dst.resolve("_distexec_tmp_t").toString, attempt, command, redirectErrorToOut = false,
+      special = false, shell)
+  }
+
+  private def fileEntry(src: JPath, rel: String): FileEntry =
+    FileEntry(src.resolve(rel).toString, src.toString, rel, Files.size(src.resolve(rel)), isDir = false, 0L)
 
   private def mkTree(): JPath = {
     val root = Files.createTempDirectory("graft-exec-src")
@@ -40,10 +80,10 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
     * under dst (outputs, `.stderr` sidecars, mirrored dirs) has the
     * stock-Hadoop mode for the session's umask, and no `.crc` exists.
     */
-  private def assertModes(fileMode: Int, dirMode: Int): Unit = {
+  private def assertModes(fileMode: Int, dirMode: Int, uri: JPath => String = _.toString): Unit = {
     val src = mkTree()
     val dst = tmpDst()
-    val rows = DistExecJob.run(spark, Seq(src.toString), dst.toString,
+    val rows = DistExecJob.run(spark, Seq(uri(src)), uri(dst),
       "sh -c 'cat; echo oops >&2'").collect()
     assert(rows.length == 3 && rows.forall(_.ok))
     // dst itself is made on the driver through the cached FileSystem
@@ -77,10 +117,10 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
       Files.list(dst).toArray.map(_.toString).forall(p => !p.contains("_distexec_tmp_")))
   }
 
-  test("grep: exit 1 on no-match accepted; empty stdout produces NO dst file") {
+  bothPaths("grep: exit 1 on no-match accepted; empty stdout produces NO dst file") { uri =>
     val src = mkTree()
     val dst = tmpDst()
-    val status = DistExecJob.run(spark, Seq(src.toString), dst.toString, "grep match")
+    val status = DistExecJob.run(spark, Seq(uri(src)), uri(dst), "grep match")
     val byRel = status.collect().map(s => s.relativeDst -> s).toMap
     assert(byRel.values.forall(_.ok))
     assert(Files.readString(dst.resolve("a.txt")) == "match me\n")
@@ -101,10 +141,10 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
     assert(c.failed == 3 && c.executed == 0)
   }
 
-  test("command that cannot start: job returns, one FAIL row per file, nothing written") {
+  bothPaths("command that cannot start: job returns, one FAIL row per file, nothing written") { uri =>
     val src = mkTree()
     val dst = tmpDst()
-    val rows = DistExecJob.run(spark, Seq(src.toString), dst.toString,
+    val rows = DistExecJob.run(spark, Seq(uri(src)), uri(dst),
       "graft-no-such-command --flag").collect()
     assert(rows.map(_.relativeDst).sorted.toSeq == Seq("a.txt", "b.txt", "sub/c.txt"))
     assert(rows.forall(r => !r.ok && r.error.startsWith(s"FAIL ${r.relativeDst} : ")),
@@ -115,19 +155,19 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
     assert(!left.exists(_.toString.contains("_distexec_tmp_")), s"tmp left: $left")
   }
 
-  test("stderr sidecar: .stderr file written only when stderr non-empty") {
+  bothPaths("stderr sidecar: .stderr file written only when stderr non-empty") { uri =>
     val src = mkTree()
     val dst = tmpDst()
-    DistExecJob.run(spark, Seq(src.toString), dst.toString,
+    DistExecJob.run(spark, Seq(uri(src)), uri(dst),
       "sh -c 'cat; echo oops >&2'").collect()
     assert(Files.readString(dst.resolve("a.txt")) == "alpha\nmatch me\n")
     assert(Files.readString(dst.resolve("a.txt.stderr")) == "oops\n")
   }
 
-  test("redirectErrorToOut interleaves stderr into stdout (real, unlike reference)") {
+  bothPaths("redirectErrorToOut interleaves stderr into stdout (real, unlike reference)") { uri =>
     val src = mkTree()
     val dst = tmpDst()
-    DistExecJob.run(spark, Seq(src.toString), dst.toString,
+    DistExecJob.run(spark, Seq(uri(src)), uri(dst),
       "sh -c 'echo first; echo second >&2'",
       DistExecOptions(redirectErrorToOut = true)).collect()
     val out = Files.readString(dst.resolve("a.txt"))
@@ -135,10 +175,10 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
     assert(!Files.exists(dst.resolve("a.txt.stderr")))
   }
 
-  test("single-file special case: dst itself becomes the output file") {
+  bothPaths("single-file special case: dst itself becomes the output file") { uri =>
     val src = mkTree()
     val dst = tmpDst()
-    DistExecJob.run(spark, Seq(src.resolve("a.txt").toString), dst.toString, "cat").collect()
+    DistExecJob.run(spark, Seq(uri(src.resolve("a.txt"))), uri(dst), "cat").collect()
     assert(Files.isRegularFile(dst), "dst must be the output FILE, not a dir")
     assert(Files.readString(dst) == "alpha\nmatch me\n")
   }
@@ -328,12 +368,12 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
     assertModes(fileMode = 0x1a4, dirMode = 0x1ed) // 0644, 0755
   }
 
-  test("modes follow fs.permissions.umask-mode=077: 0600 files, 0700 dirs") {
+  bothPaths("modes follow fs.permissions.umask-mode=077: 0600 files, 0700 dirs") { uri =>
     val hc = spark.sparkContext.hadoopConfiguration
     val key = "fs.permissions.umask-mode"
     val old = hc.get(key)
     hc.set(key, "077")
-    try assertModes(fileMode = 0x180, dirMode = 0x1c0) // 0600, 0700
+    try assertModes(fileMode = 0x180, dirMode = 0x1c0, uri) // 0600, 0700
     finally if (old == null) hc.unset(key) else hc.set(key, old)
   }
 
@@ -366,15 +406,24 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
     val entry = graft.fs.FileEntry(src.resolve("f.txt").toString,
       src.toString, "f.txt", 8L, isDir = false, 0L)
     val tmpRoot = dst.resolve("_distexec_tmp_close")
-    val st = DistExecJob.executeOne(conf, failing, entry, dst.toString, tmpRoot.toString,
+    // not taskPrivate's local instance: the pump path, whose helper never starts
+    val st = new DistExecJob.TaskExec(conf, failing, dst.toString, tmpRoot.toString,
       "0-1", "sh -c 'cat; echo oops >&2'", redirectErrorToOut = false,
-      special = false)
+      special = false, new ShellHelper).executeOne(entry)
     assert(!st.ok && st.error.contains("injected close failure"), st)
     assert(closed.asScala == Set("f.txt", "f.txt.stderr"), s"closed: $closed")
     assert(walk(dst).forall(Files.isDirectory(_)), s"files left: ${walk(dst)}")
   }
 
   test("speculation race: two attempts of one file — last rename wins, no partial output") {
+    speculationRace(local = false) // the stock local filesystem: the pump path
+  }
+
+  test("speculation race: two attempts of one file — last rename wins, no partial output (local path)") {
+    speculationRace(local = true)
+  }
+
+  private def speculationRace(local: Boolean): Unit = {
     // The R15/R20 claim driven adversarially: Spark speculation runs the
     // SAME file in two concurrent attempts. Each writes an
     // attempt-unique tmp and atomically renames into place, so the
@@ -390,7 +439,9 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
       Files.writeString(src.resolve("f.txt"), payload)
       val dst = tmpDst()
       Files.createDirectories(dst)
-      val dstFs = new Path(dst.toString).getFileSystem(conf)
+      val dstFs =
+        if (local) DstFileSystem.taskPrivate(dst.toString, conf)
+        else new Path(dst.toString).getFileSystem(conf)
       val entry = graft.fs.FileEntry(src.resolve("f.txt").toString,
         src.toString, "f.txt", payload.length.toLong, isDir = false, 0L)
       val tmpRoot = dst.resolve("_distexec_tmp_race").toString
@@ -398,10 +449,12 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
       val results = new java.util.concurrent.ConcurrentLinkedQueue[ExecStatus]()
       val threads = Seq("0-1", "1-2").map { attempt =>
         new Thread(() => {
-          barrier.await()
-          results.add(DistExecJob.executeOne(conf, dstFs, entry, dst.toString,
+          val shell = new ShellHelper
+          val exec = new DistExecJob.TaskExec(conf, dstFs, dst.toString,
             tmpRoot, attempt, "cat", redirectErrorToOut = false,
-            special = false))
+            special = false, shell)
+          barrier.await()
+          try results.add(exec.executeOne(entry)) finally shell.close()
         })
       }
       threads.foreach(_.start()); threads.foreach(_.join())
@@ -419,4 +472,153 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
       assert(tmps.isEmpty, s"round $round: tmp residue $tmps")
     }
   }
+
+  // ------------------------------------------------- the local exec path
+
+  /** Names of the `graft-pump-*` threads alive at some point while
+    * `body` runs, sampled every 10 ms.
+    */
+  private def pumpThreadsDuring(body: => Unit): Set[String] = {
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val running = new java.util.concurrent.atomic.AtomicBoolean(true)
+    val sampler = new Thread(() => while (running.get) {
+      Thread.getAllStackTraces.keySet.asScala.map(_.getName)
+        .filter(_.startsWith("graft-pump-")).foreach(seen.add)
+      Thread.sleep(10)
+    })
+    sampler.start()
+    try body finally { running.set(false); sampler.join() }
+    seen.asScala.toSet
+  }
+
+  test("a local run starts no graft-pump-* thread") {
+    val src = mkTree()
+    val dst = tmpDst()
+    val seen = pumpThreadsDuring {
+      val rows = DistExecJob.run(spark, Seq(src.toString), dst.toString, "sh -c 'sleep 0.3; cat'").collect()
+      assert(rows.length == 3 && rows.forall(_.ok), rows.toSeq)
+    }
+    assert(seen.isEmpty, seen)
+    assert(Files.readString(dst.resolve("a.txt")) == "alpha\nmatch me\n")
+  }
+
+  test("a pump-path run starts graft-pump-* threads (the probe sees them)") {
+    val src = mkTree()
+    val seen = pumpThreadsDuring {
+      DistExecJob.run(spark, Seq(viaPump(src)), viaPump(tmpDst()), "sh -c 'sleep 0.3; cat'").collect()
+    }
+    assert(seen.nonEmpty)
+  }
+
+  test("no shell helper outlives a job, successful or with a failing file") {
+    val src = mkTree()
+    assert(helpers().isEmpty, helpers())
+    val ok = DistExecJob.run(spark, Seq(src.toString), tmpDst().toString, "cat").collect()
+    assert(ok.length == 3 && ok.forall(_.ok), ok.toSeq)
+    assert(helpers().isEmpty, helpers())
+    // exit 1 of /bin/grep is a failure: the grep exception is for bare names
+    val mixed = DistExecJob.run(spark, Seq(src.toString), tmpDst().toString, "/bin/grep match").collect()
+    assert(mixed.filterNot(_.ok).map(_.relativeDst).toSeq == Seq("b.txt"), mixed.toSeq)
+    assert(helpers().isEmpty, helpers())
+  }
+
+  test("the shell helper starts at the first local file, and close kills it") {
+    val src = mkTree()
+    val dst = Files.createDirectories(tmpDst())
+    val shell = new ShellHelper
+    val exec = taskExec(dst, "cat", shell)
+    assert(helpers().isEmpty, helpers())
+    assert(exec.executeOne(fileEntry(src, "a.txt")).ok)
+    assert(helpers().size == 1, helpers())
+    shell.close()
+    assert(helpers().isEmpty, helpers())
+  }
+
+  bothPaths("argv and file names holding shell metacharacters, newlines, a leading - and non-ASCII text round-trip") { uri =>
+    val jnu = java.nio.charset.Charset.forName(System.getProperty("sun.jnu.encoding"))
+    // text outside ASCII, where the JVM can name it to the OS at all
+    val other = Seq("caf\u00e9 \u0436").filter(jnu.newEncoder().canEncode(_))
+    val words = Seq("it's", "say \"hi\"", "$HOME", "`id`", "back\\slash", "two  words",
+      "line1\nline2", "-e", "-", "*") ++ other
+    val names = Seq("it's \"q\" $HOME `id` back\\slash.txt", "-lead\nnew line*.txt") ++ other.map(_ + ".txt")
+    val src = Files.createTempDirectory("graft-exec-names")
+    val dir = Files.createDirectories(src.resolve("d $x 'y'"))
+    names.foreach(n => Files.write(dir.resolve(n), s"body of $n\n".getBytes(UTF_8)))
+    val dst = tmpDst()
+    // CommandLine groups a word in '…', or in "…" when it holds a '
+    val quoted = words.map(w => if (w.contains('\'')) "\"" + w + "\"" else "'" + w + "'")
+    val cmd = "sh -c 'printf \"%s\\0\" \"$@\"; cat' sh " + quoted.mkString(" ")
+    val rows = DistExecJob.run(spark, Seq(uri(src)), uri(dst), cmd).collect()
+    assert(rows.length == names.length && rows.forall(_.ok), rows.toSeq)
+    names.foreach { n =>
+      val out = new String(Files.readAllBytes(dst.resolve("d $x 'y'").resolve(n)), UTF_8)
+      assert(out == words.map(_ + "\u0000").mkString + s"body of $n\n", n)
+    }
+  }
+
+  test("bytesIn on the local path is the source length, also when the child reads 1 byte") {
+    val src = Files.createTempDirectory("graft-exec-head")
+    Files.write(src.resolve("f.bin"), Array.fill[Byte](4096)('x'))
+    val rows = DistExecJob.run(spark, Seq(src.toString), tmpDst().toString, "head -c 1").collect()
+    assert(rows.map(r => (r.ok, r.bytesIn, r.bytesOut)).toSeq == Seq((true, 4096L, 1L)), rows.toSeq)
+  }
+
+  test("builtins as commands give FAIL rows and leave the helper serving the next file") {
+    val src = mkTree()
+    for (cmd <- Seq("exit 3", "cd /")) {
+      val rows = DistExecJob.run(spark, Seq(src.toString), tmpDst().toString, cmd).collect()
+      assert(rows.length == 3 && rows.forall(r => !r.ok && r.error.contains("status 127")), rows.toSeq)
+    }
+    // one helper across three attempts: the builtins run in its subshells
+    val dst = Files.createDirectories(tmpDst())
+    val shell = new ShellHelper
+    try {
+      assert(!taskExec(dst, "exit 3", shell, attempt = "0-1").executeOne(fileEntry(src, "a.txt")).ok)
+      val helper = helpers()
+      assert(helper.size == 1, helper)
+      assert(!taskExec(dst, "cd /", shell, attempt = "0-2").executeOne(fileEntry(src, "a.txt")).ok)
+      assert(taskExec(dst, "pwd", shell, attempt = "0-3").executeOne(fileEntry(src, "a.txt")).ok)
+      assert(Files.readString(dst.resolve("a.txt")) == System.getProperty("user.dir") + "\n")
+      assert(helpers() == helper)
+    } finally shell.close()
+  }
+
+  test("a helper killed mid-task fails only the file in flight; the next file starts a new one") {
+    val src = Files.createTempDirectory("graft-exec-kill")
+    val words = Seq("one", "die", "three")
+    words.foreach(w => Files.writeString(src.resolve(s"$w.txt"), s"$w\n"))
+    val dst = Files.createDirectories(tmpDst())
+    val shell = new ShellHelper
+    // the child's parent is the helper
+    val exec = taskExec(dst, "sh -c 'read x; [ \"$x\" != die ] || kill -9 $PPID; echo \"$x\"'", shell)
+    try {
+      val rows = words.map(w => exec.executeOne(fileEntry(src, s"$w.txt")))
+      assert(rows.map(_.ok) == Seq(true, false, true), rows)
+      assert(rows(1).error.contains("shell helper"), rows(1))
+      assert(Files.readString(dst.resolve("one.txt")) == "one\n")
+      assert(Files.readString(dst.resolve("three.txt")) == "three\n")
+      val files = walk(dst).filter(Files.isRegularFile(_)).map(dst.relativize(_).toString).toSet
+      assert(files == Set("one.txt", "three.txt"), files)
+    } finally shell.close()
+  }
+
+  test("a publish failure is a FAIL row that leaves no tmp and no partial destination") {
+    val src = mkTree()
+    val dst = Files.createDirectories(tmpDst())
+    // a plain file where the output's parent directory belongs
+    Files.writeString(dst.resolve("sub"), "plain\n")
+    val shell = new ShellHelper
+    try {
+      val st = taskExec(dst, "sh -c 'cat; echo oops >&2'", shell).executeOne(fileEntry(src, "sub/c.txt"))
+      assert(!st.ok && st.error.startsWith("FAIL sub/c.txt : "), st)
+      val files = walk(dst).filter(Files.isRegularFile(_))
+      assert(files == Seq(dst.resolve("sub")), files)
+      assert(Files.readString(dst.resolve("sub")) == "plain\n")
+    } finally shell.close()
+  }
 }
+
+/** The stock local filesystem under the `pumplocal:` scheme. */
+class PumpLocalFileSystem extends LocalFileSystem(new RawLocalFileSystem {
+  override def getUri: URI = URI.create("pumplocal:///")
+})
