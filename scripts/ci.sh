@@ -24,6 +24,12 @@ python3 perfbench/run.py --workload exec_small --seed 1 --seconds 10 --trace 0 2
   | tail -1 | python3 -c 'import json, sys; r = json.loads(sys.stdin.read()); print(r)
 sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)'
 
+echo "=== query_suite smoke ==="
+# every query's digest must match at the partition count Tuning derives
+python3 perfbench/run.py --workload query_suite --seed 1 --seconds 10 --trace 0 2>/dev/null \
+  | tail -1 | python3 -c 'import json, sys; r = json.loads(sys.stdin.read()); print(r)
+sys.exit(0 if r["correct"] is True and r["failed"] == 0 else 1)'
+
 if [ "${1:-}" != "--quick" ]; then
   echo "=== bench sf0.1 ==="
   # Bench reads sf0.1 by default (SPARK_GRAFT_SF_DIR unset)

@@ -285,13 +285,15 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     // Shuffle partitions track DATA SIZE, not core count (measured: 8
     // beats 32 by ~15% at sf0.1; c55 at 10× wants ~64+). The default
     // derives from the COMPRESSED input bytes under sfDir (Tuning: one
-    // partition per 2 MiB on disk ≈ 16–20 MiB decoded, floor 8 — sf0.1's
-    // 17.5 MB stays at the measured ~8, larger inputs scale up without a
-    // hand-set env); SPARK_GRAFT_SHUFFLE still overrides.
+    // partition per 2 MiB on disk ≈ 16–20 MiB decoded, clamped to
+    // [1, 2000] — sf0.1's 17.5 MB derives 9, sf0.01 derives 1, larger
+    // inputs scale up without a hand-set env); SPARK_GRAFT_SHUFFLE
+    // still overrides.
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "auto") match {
       case "auto" => Tuning.shufflePartitionsFor(Tuning.dirBytes(sfDir)).toString
       case n      => n

@@ -14,7 +14,8 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.drop(1).toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "auto") match {
       case "auto" => Tuning.shufflePartitionsFor(Tuning.dirBytes(sfDir)).toString
       case n      => n

@@ -12,7 +12,13 @@ import org.apache.spark.sql.SparkSession
   * same-order ceiling — the rule here is one partition per
   * [[TargetBytesPerPartition]] of INPUT bytes (post-shuffle data for
   * the explode-heavy queries is larger, which AQE's coalescing and
-  * skew-splitting then shape), clamped to [8, 2000].
+  * skew-splitting then shape), clamped to [1, 2000]. There is no
+  * floor above 1: a constant floor of 8 turned every shuffle of an
+  * input under 16 MiB into 8 near-empty tasks. On a 4-core box the
+  * byte rule alone ran the sf0.01 query suite 1.32× as fast as the
+  * floor of 8 (median of 20 pairs), and a floor of 4, the core count,
+  * recovered less than half of that (PERF.md, "Shuffle partitions
+  * from bytes alone").
   */
 object Tuning {
 
@@ -21,10 +27,10 @@ object Tuning {
     * corpus decodes to ~8–10× its file size (sf0.1 is 17.5 MB on disk
     * for ~150 MB of rows), so 2 MiB compressed ≈ 16–20 MiB of in-memory
     * shuffle input — the granularity the r6 evidence calibrated: sf0.1
-    * lands near the floor of 8 (the measured sweet spot — 32 × small
-    * tasks were scheduling-dominated), 10× (118 MB on disk) lands at
-    * ~57 (the c55 recovery band, 12.4×→7.4× measured at 64–128), 100×
-    * at ~570.
+    * derives 9 (near the measured sweet spot of 8 — 32 × small tasks
+    * were scheduling-dominated), sf0.01 (1.9 MB) derives 1, 10× (118 MB
+    * on disk) derives 59 (the c55 recovery band, 12.4×→7.4× measured at
+    * 64–128), 100× ~570.
     */
   val TargetBytesPerPartition: Long = 2L << 20
 
@@ -49,7 +55,7 @@ object Tuning {
   }
 
   def shufflePartitionsFor(bytes: Long): Int =
-    math.min(2000L, math.max(8L,
+    math.min(2000L, math.max(1L,
       (bytes + TargetBytesPerPartition - 1) / TargetBytesPerPartition)).toInt
 
   /** Parquet files under `path` (a table file or a part-file directory). */
@@ -70,13 +76,9 @@ object Tuning {
 
   /** (rowGroups, Map[columnDotPath -> compressedBytes]) summed over the
     * parquet FOOTERS under `path` — footer reads only, O(files) tiny
-    * I/O, the same metadata Spark's scan planning reads. This is the
-    * projection-aware correction to [[dirBytes]]: the dir-bytes rule
-    * counts ALL columns, so a 2-column projection of a 16-column table
-    * over-partitions ~8× (r12, c70: its histogram pass ran 0.47 s at
-    * the scan's 10 tasks vs 1.38 s at the dir-bytes-derived 91 — each
-    * extra task pays aggregation-map setup for a fraction of a
-    * partition of rows).
+    * I/O, the same metadata Spark's scan planning reads. Unlike
+    * [[dirBytes]] it sees what a scan will actually read: row groups
+    * (see [[rowGroupCount]]) and the compressed bytes of each column.
     */
   def footerStats(path: String): (Long, Map[String, Long]) = {
     import scala.jdk.CollectionConverters._
@@ -106,24 +108,6 @@ object Tuning {
     * does all the work (ADVICE r12 on c70's fan-out guard).
     */
   def rowGroupCount(path: String): Long = footerStats(path)._1
-
-  /** Compressed bytes of just `cols` (top-level dot-path prefixes) under
-    * `path`; empty `cols` = all columns (≡ data pages of dirBytes).
-    */
-  def projectedBytes(path: String, cols: Set[String]): Long = {
-    val (_, byCol) = footerStats(path)
-    if (cols.isEmpty) byCol.values.sum
-    else byCol.collect {
-      case (name, b) if cols.contains(name.takeWhile(_ != '.')) => b
-    }.sum
-  }
-
-  /** [[shufflePartitionsFor]] fed by the PROJECTED column bytes rather
-    * than whole-directory bytes — the partition count a narrow
-    * projection actually wants.
-    */
-  def shufflePartitionsForProjection(path: String, cols: Set[String]): Int =
-    shufflePartitionsFor(projectedBytes(path, cols))
 
   /** Bucket shift for a VALUE-DOMAIN histogram (c70's quantile replay
     * leg): bucket id is `v >> shift`, so the dial trades histogram rows

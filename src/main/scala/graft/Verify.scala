@@ -6,10 +6,12 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle partitions derive from input bytes (Tuning; floor 8, AQE
-    // coalesces down) — correctness is partition-count-independent by
-    // the exact-arithmetic contract, so this only moves time.
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    // shuffle partitions derive from input bytes (Tuning; one per 2 MiB,
+    // at least 1, AQE coalesces down) — correctness is
+    // partition-count-independent by the exact-arithmetic contract
+    // (PartitionIndependenceSpec), so this only moves time.
     val shuffle = Tuning.shufflePartitionsFor(Tuning.dirBytes(sfDir))
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")

@@ -70,37 +70,27 @@ class TuningSpec extends AnyFunSuite {
     assert(Tuning.bucketShift(1000L, 10L, 5L) == 0)
   }
 
-  test("shufflePartitionsFor clamps to [8, 2000]") {
-    assert(Tuning.shufflePartitionsFor(0L) == 8)
-    assert(Tuning.shufflePartitionsFor(Long.MaxValue / 4) == 2000)
+  test("shufflePartitionsFor is ceil(bytes / 2 MiB) clamped to [1, 2000]") {
+    assert(Tuning.shufflePartitionsFor(0L) == 1)
+    // the benchmark's sf0.01 tables run one partition
+    assert(Tuning.shufflePartitionsFor(Tuning.dirBytes("/root/testdata/sf0.01")) == 1)
+    // sf0.1 (17.5 MB on disk) keeps the Bench plan it had under the old
+    // floor of 8
+    assert(Tuning.shufflePartitionsFor(Tuning.dirBytes("/root/testdata/sf0.1")) == 9)
     assert(Tuning.shufflePartitionsFor(118L << 20) == 59)
+    assert(Tuning.shufflePartitionsFor(Long.MaxValue / 4) == 2000)
   }
 
-  /** The r13 projection-aware correction (c70 evidence, PERF.md r12):
-    * the dir-bytes rule counts ALL columns, so a narrow projection of a
-    * wide table over-partitions ~(table width / projection width). The
-    * footer stats expose per-column compressed bytes and true row-group
-    * counts so partition sizing (and the c70 fan-out gate) can see what
-    * the scan will actually read.
+  /** The footer stats count what a scan will actually read: true row
+    * groups (c70's fan-out gate) and compressed bytes per column.
     */
-  test("footer stats: projected bytes, row groups, partition derivation") {
+  test("footer stats: row groups and per-column bytes") {
     val table = "/root/testdata/sf0.1/lineitem.parquet"
     val (groups, byCol) = Tuning.footerStats(table)
     assert(groups >= 1L, "at least one row group")
     assert(Tuning.rowGroupCount(table) == groups)
-    val all = Tuning.projectedBytes(table, Set.empty)
-    val narrow = Tuning.projectedBytes(table,
-      Set("l_returnflag", "l_extendedprice"))
-    assert(narrow > 0L, "projected columns must be found in the footer")
-    assert(narrow < all / 2,
-      s"2 of ${byCol.size} columns should be well under half the data " +
-        s"pages (narrow=$narrow all=$all)")
-    // a column that doesn't exist contributes nothing
-    assert(Tuning.projectedBytes(table, Set("no_such_col")) == 0L)
-    // the derived partition count for the narrow projection never
-    // exceeds the all-columns one
-    assert(Tuning.shufflePartitionsForProjection(table,
-        Set("l_returnflag", "l_extendedprice"))
-      <= Tuning.shufflePartitionsFor(all))
+    assert(byCol.contains("l_extendedprice") && byCol.contains("l_returnflag"),
+      s"columns missing from the footer: ${byCol.keySet}")
+    assert(byCol.values.forall(_ > 0L), "every column chunk has bytes")
   }
 }
