@@ -14,6 +14,28 @@ for sf in 0.001 0.01 $([ "${1:-}" = "--quick" ] || echo 0.1); do
   python3 scripts/selfcheck.py "/tmp/ci_verify_$sf" "/root/testdata/sf$sf" | tail -2
 done
 
+echo "=== distexec CLI smoke ==="
+# the paper's entry point end to end: three Latin-1 files through iconv,
+# each output byte-equal to iconv run on that file directly
+cli=$(mktemp -d)
+trap 'rm -rf "$cli"' EXIT
+mkdir -p "$cli/src/sub"
+printf 'caf\xe9\n' > "$cli/src/a.txt"
+printf 'na\xefve \xfcber\n' > "$cli/src/b.txt"
+printf '\xa9 \xb5 \xbd\n' > "$cli/src/sub/c.txt"
+set +e
+sbt -batch "runMain graft.cli.Main $cli/src $cli/dst \"iconv -f iso8859-1 -t utf-8\"" \
+  > "$cli/out" 2> "$cli/err"
+rc=$?
+set -e
+grep -E "EXECUTED=|FAIL=" "$cli/out" || true
+[ "$rc" -eq 0 ] || { echo "distexec exited $rc"; tail -20 "$cli/out" "$cli/err"; exit 1; }
+grep -q "EXECUTED=3 FAIL=0" "$cli/out" || { echo "counters line missing"; exit 1; }
+for f in a.txt b.txt sub/c.txt; do
+  iconv -f iso8859-1 -t utf-8 < "$cli/src/$f" | cmp - "$cli/dst/$f" \
+    || { echo "distexec output differs for $f"; exit 1; }
+done
+
 echo "=== perfbench harness self-tests ==="
 python3 perfbench/run.py --test
 

@@ -242,8 +242,7 @@ object ExtOps {
       // slice 0.52 → 0.09 s. Estimates differ from the row path only
       // by merge order — both stay inside the deterministic rank-error
       // band the output boolean asserts (the c24/c70 contract), so the
-      // oracle and the SqlEntry twin (which keeps the row spelling)
-      // are unchanged. Falls back to the row path whenever the input
+      // oracle is unchanged. Falls back to the row path whenever the input
       // is not a pure columnar scan (ColumnarKernel.scanBatches = None),
       // the kernel is disabled for an A/B arm, or the input is a
       // single-row-group bench file (same gate as the row path's

@@ -4,19 +4,19 @@ import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** NULL-text semantics of the exact-dedup census: the driver testdata
-  * has no NULL text, so the oracle gate can never exercise the rule.
-  * This spec pins it: b1's DataFrame twin and its SqlEntry text must
-  * agree on a corpus WITH NULL text, and the NULL row must count as one
-  * distinct value (the c24 coalesce-to-'' rule) — not silently vanish
-  * from count(DISTINCT).
+/** NULL-text semantics of the null-sensitive queries: the testdata
+  * tables have no NULL text, so the oracle gate can never exercise
+  * them. This spec pins each query to the literal rows worked out for a
+  * hand-built corpus WITH NULL text, and its SqlEntry text to the same
+  * rows; in b1 the NULL row must count as one distinct value (the c24
+  * coalesce-to-'' rule) — not silently vanish from count(DISTINCT).
   */
 class NullTextSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
   private lazy val dir: String = {
     val d = Files.createTempDirectory("nulltext").toFile
-    // reuse the real tables for everything registerViews loads...
+    // reuse the real tables for everything the queries load...
     for (t <- SqlEntry.tableNames if t != "documents") {
       Files.createSymbolicLink(
         new java.io.File(d, s"$t.parquet").toPath,
@@ -37,12 +37,18 @@ class NullTextSpec extends AnyFunSuite with SparkSpec {
     d.getAbsolutePath
   }
 
+  /** The DataFrame path's column names and rows for `q` over `d`. */
+  private def run(q: String, d: String): (Seq[String], Seq[Seq[Any]]) = {
+    val df = SparkEntry.queries(q)(spark, d)
+    (df.schema.fieldNames.toSeq, df.collect().map(_.toSeq).toSeq)
+  }
+
   test("b1 twin counts a NULL-text row as one distinct hash") {
-    val rows = graft.queries.GroupB.queries("b1_exact_dedup")(spark, dir)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    val (cols, rows) = run("b1_exact_dedup", dir)
+    assert(cols == Seq("source", "n_docs", "n_distinct", "n_dupes"))
     // srcA: 3 docs, 2 distinct ({'same text', NULL}), 1 dupe
     // srcB: 3 docs, 2 distinct ({'only doc', NULL}), 1 dupe (2nd NULL)
-    assert(rows.toSeq == Seq(("srcA", 3L, 2L, 1L), ("srcB", 3L, 2L, 1L)))
+    assert(rows == Seq(Seq("srcA", 3L, 2L, 1L), Seq("srcB", 3L, 2L, 1L)))
   }
 
   test("b1 SQL text matches the twin on NULL text row-for-row") {
@@ -53,17 +59,33 @@ class NullTextSpec extends AnyFunSuite with SparkSpec {
     assert(text == twin)
   }
 
-  // The r8 review found this exact divergence class twice: a null-key
-  // filter applied to a DataFrame path but not its SQL twin (or vice
-  // versa) passes every oracle run — the testdata has no NULLs — and
-  // detonates on the first hostile corpus. Pin the round's new queries
-  // against it mechanically: DataFrame twin ≡ SQL text on a corpus
-  // WITH NULL text, and the output shape stays sane.
-  for (q <- Seq("c45_hll_distinct", "c71_overlap_hll", "c72_membership_gate")) {
+  // The r8 review found this divergence class twice: a null-key filter
+  // applied to one spelling of a query but not another passes every
+  // oracle run — the testdata has no NULLs — and detonates on the first
+  // hostile corpus. Pin the null-sensitive queries to the rows worked
+  // out for the corpus above, and their SQL texts to the same rows.
+  private val expectedOnNullText: Seq[(String, Seq[String], Seq[Seq[Any]])] = Seq(
+    // one lang: the NULL-text rows leave both the exact distinct count
+    // and the registers
+    ("c45_hll_distinct", Seq("lang", "n_exact", "n_est", "n_empty"),
+      Seq(Seq("en", 2L, 23L, 30L))),
+    // one source pair: NULL text never counts as a shared document
+    ("c71_overlap_hll", Seq("source_a", "source_b", "est_a", "est_b",
+      "est_union", "est_shared", "n_exact_shared"),
+      Seq(Seq("srcA", "srcB", 22L, 22L, 23L, 21L, 0L))),
+    // no doc_id of the corpus is an eval doc (doc_id % 97 = 0), so the
+    // gate reports no lang; the NULL-text training rows must still
+    // build the filter
+    ("c72_membership_gate", Seq("lang", "n_eval", "n_flagged", "n_hits_exact",
+      "n_false_neg"), Seq()))
+
+  for ((q, cols, rows) <- expectedOnNullText) {
     test(s"$q SQL text matches the twin on NULL text row-for-row") {
-      val twin = SparkEntry.queries(q)(spark, dir).collect().map(_.toSeq).toSeq
+      val (gotCols, got) = run(q, dir)
+      assert(gotCols == cols, s"$q columns drifted")
+      assert(got == rows, s"$q on a NULL-text corpus returned $got")
       val text = SqlEntry.sql(spark, dir, q).collect().map(_.toSeq).toSeq
-      assert(text == twin, s"$q diverges on a NULL-text corpus")
+      assert(text == got, s"$q SQL text diverges on a NULL-text corpus")
     }
   }
 
@@ -94,12 +116,19 @@ class NullTextSpec extends AnyFunSuite with SparkSpec {
   }
 
   test("c73 on NULL/empty langs: three spellings agree; no NULL rows escape") {
-    val twin = SparkEntry.queries("c73_weighted_quantiles")(spark, dirLang)
-      .collect()
+    val df = SparkEntry.queries("c73_weighted_quantiles")(spark, dirLang)
+    val twin = df.collect()
     val text = SqlEntry.sql(spark, dirLang, "c73_weighted_quantiles")
       .collect()
     assert(twin.map(_.toSeq).toSeq == text.map(_.toSeq).toSeq,
       "c73 DataFrame twin and SQL text diverge on a NULL-lang corpus")
+    assert(df.schema.fieldNames.toSeq ==
+      Seq("lang", "total_tokens", "wp50_tokens", "wp90_tokens", "sketch_within_band"))
+    // en: token counts {3, 2}, weights {3, 2}, tw 5, ranks 3 and 5 land
+    // on 3; es: one 4-token doc
+    assert(twin.map(_.toSeq).toSeq ==
+      Seq(Seq("en", 5L, 3L, 3L, true), Seq("es", 4L, 4L, 4L, true)),
+      s"c73 on a NULL-lang corpus returned ${twin.map(_.toSeq).toSeq}")
     val langs = twin.map(_.getString(0)).toSeq
     assert(langs == Seq("en", "es"),
       s"NULL lang and the zero-weight lang must be excluded, got $langs")
