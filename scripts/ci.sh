@@ -4,21 +4,27 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# the Verify outputs and the CLI smoke tree live under $tmp, removed on exit
+tmp=$(mktemp -d)
+trap 'rm -rf "$tmp"' EXIT
+
 echo "=== sbt test ==="
 sbt -batch test 2>&1 | grep -E "Tests:|All tests" | tail -2
 
 for sf in 0.001 0.01 $([ "${1:-}" = "--quick" ] || echo 0.1); do
   echo "=== verify + selfcheck sf$sf ==="
-  sbt -batch "runMain graft.Verify /root/testdata/sf$sf /tmp/ci_verify_$sf" 2>&1 \
+  # a fresh directory per run: Verify logs a failing query and goes on,
+  # so a reused one would hand selfcheck an earlier run's result for it
+  out=$(mktemp -d "$tmp/verify_sf$sf.XXXXXX")
+  sbt -batch "runMain graft.Verify /root/testdata/sf$sf $out" 2>&1 \
     | grep -E "\[verify\]" || true
-  python3 scripts/selfcheck.py "/tmp/ci_verify_$sf" "/root/testdata/sf$sf" | tail -2
+  python3 scripts/selfcheck.py "$out" "/root/testdata/sf$sf" | tail -2
 done
 
 echo "=== distexec CLI smoke ==="
 # the paper's entry point end to end: three Latin-1 files through iconv,
 # each output byte-equal to iconv run on that file directly
-cli=$(mktemp -d)
-trap 'rm -rf "$cli"' EXIT
+cli=$(mktemp -d "$tmp/cli.XXXXXX")
 mkdir -p "$cli/src/sub"
 printf 'caf\xe9\n' > "$cli/src/a.txt"
 printf 'na\xefve \xfcber\n' > "$cli/src/b.txt"

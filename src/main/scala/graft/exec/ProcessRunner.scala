@@ -122,21 +122,3 @@ object ExitPolicy {
     if (!accepts(argv, exitCode))
       throw new IOException(s"Process '${argv.mkString(" ")}' exited with status $exitCode")
 }
-
-/** One execution: tokenize the command line, run it, apply the exit-code
-  * policy (reference: Executor.java:37-52). Throws [[IOException]] on a
-  * rejected exit code.
-  */
-object Executor {
-  def execute(
-      commandLine: String,
-      stdin: InputStream,
-      stdout: OutputStream,
-      stderr: OutputStream,
-      redirectErrorToOut: Boolean = false): ExecResult = {
-    val argv = CommandLine.translate(commandLine)
-    val res = ProcessRunner.run(argv, stdin, stdout, stderr, redirectErrorToOut)
-    ExitPolicy.check(argv, res.exitCode)
-    res
-  }
-}

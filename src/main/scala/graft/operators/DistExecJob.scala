@@ -4,7 +4,7 @@ import java.io.{IOException, OutputStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, NoSuchFileException, Paths, StandardCopyOption, Path => JPath}
 
-import graft.exec.{CommandLine, Executor, ExitPolicy, ShellHelper}
+import graft.exec.{CommandLine, ExitPolicy, ProcessRunner, ShellHelper}
 import graft.fs.{DstFileSystem, FileEntry, Manifest, ModPartitioner}
 
 import org.apache.hadoop.conf.Configuration
@@ -357,8 +357,8 @@ object DistExecJob {
     *    child with kernel redirects from the source into the flat tmp
     *    files `<tmpRoot>/<attempt>/<n>` and `<n>.stderr`, each published
     *    by one `rename(2)`;
-    *  - pumped, for every other file: [[Executor]] streams the source
-    *    through the child into `<tmpRoot>/<attempt>/<relativeDst>`,
+    *  - pumped, for every other file: [[ProcessRunner]] streams the
+    *    source through the child into `<tmpRoot>/<attempt>/<relativeDst>`,
     *    published through `dstFs`.
     * Either way an empty stream makes no file, a rejected exit code or
     * any error is a FAIL row, and the file's tmp files are removed.
@@ -451,13 +451,14 @@ object DistExecJob {
         val out = new LazyOut(dstFs, tmpFile)
         val err = new LazyOut(dstFs, tmpErr)
         val res =
-          try Executor.execute(command, in, out, err, redirectErrorToOut)
+          try ProcessRunner.run(argv, in, out, err, redirectErrorToOut)
           finally {
             try in.close() catch { case _: IOException => () }
             // err closes even when out's close throws (else its stream and
             // tmp file handle leak); the throw still fails the file
             try out.close() finally err.close()
           }
+        ExitPolicy.check(argv, res.exitCode)
         // Atomic publish: delete-existing + rename tmp→dst, per stream
         // (reference rename, ExecFilesMapper.java:156-170). No tmp ⇒ no file.
         if (out.created) rename(dstFs, tmpFile, dstFile)

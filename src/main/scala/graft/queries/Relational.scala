@@ -892,11 +892,8 @@ object Relational {
         .orderBy(col("n_name"))
     }))
 
-  /** The d29 oracle's per-edge blocks, generated from [[RefEdges]].
-    * Fully ANSI (FULL JOIN + CASE), so [[graft.SqlEntry]] reuses the
-    * same text verbatim as the Spark-dialect d29 entry.
-    */
-  private[graft] def refEdgeSql: String = RefEdges.map { case (rel, ct, ck, pt, pk) =>
+  /** The d29 oracle's per-edge blocks, generated from [[RefEdges]]. */
+  private def refEdgeSql: String = RefEdges.map { case (rel, ct, ck, pt, pk) =>
     s"""SELECT '$rel' AS relation,
        |  CAST(coalesce(sum(cnt), 0) AS BIGINT) AS n_child_rows,
        |  CAST(coalesce(sum(CASE WHEN p.k IS NULL THEN cnt END), 0) AS BIGINT)

@@ -14,28 +14,31 @@ import org.scalatest.funsuite.AnyFunSuite
 class NullTextSpec extends AnyFunSuite with SparkSpec {
   import spark.implicits._
 
-  private lazy val dir: String = {
-    val d = Files.createTempDirectory("nulltext").toFile
-    // reuse the real tables for everything the queries load...
+  /** A testdata directory whose documents table is `docs` (doc_id,
+    * text, lang, source, n_chars); every other table links to the real
+    * sf0.001 one.
+    */
+  private def corpus(prefix: String, docs: Seq[(Long, String, String, String, Long)]): String = {
+    val d = Files.createTempDirectory(prefix).toFile
     for (t <- SqlEntry.tableNames if t != "documents") {
       Files.createSymbolicLink(
         new java.io.File(d, s"$t.parquet").toPath,
         Paths.get(s"/root/testdata/sf0.001/$t.parquet"))
     }
-    // ...but swap documents for a corpus with NULL text: srcA has two
-    // identical docs + one NULL; srcB has one doc + two NULLs.
-    Seq(
-      (1L, "same text", "en", "srcA", 9L),
-      (2L, "same text", "en", "srcA", 9L),
-      (3L, null.asInstanceOf[String], "en", "srcA", 0L),
-      (4L, "only doc", "en", "srcB", 8L),
-      (5L, null.asInstanceOf[String], "en", "srcB", 0L),
-      (6L, null.asInstanceOf[String], "en", "srcB", 0L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
+    docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .coalesce(1).write.mode("overwrite")
       .parquet(new java.io.File(d, "documents.parquet").toString)
     d.getAbsolutePath
   }
+
+  // srcA has two identical docs + one NULL; srcB has one doc + two NULLs.
+  private lazy val dir: String = corpus("nulltext", Seq(
+    (1L, "same text", "en", "srcA", 9L),
+    (2L, "same text", "en", "srcA", 9L),
+    (3L, null.asInstanceOf[String], "en", "srcA", 0L),
+    (4L, "only doc", "en", "srcB", 8L),
+    (5L, null.asInstanceOf[String], "en", "srcB", 0L),
+    (6L, null.asInstanceOf[String], "en", "srcB", 0L)))
 
   /** The DataFrame path's column names and rows for `q` over `d`. */
   private def run(q: String, d: String): (Seq[String], Seq[Seq[Any]]) = {
@@ -75,7 +78,7 @@ class NullTextSpec extends AnyFunSuite with SparkSpec {
       Seq(Seq("srcA", "srcB", 22L, 22L, 23L, 21L, 0L))),
     // no doc_id of the corpus is an eval doc (doc_id % 97 = 0), so the
     // gate reports no lang; the NULL-text training rows must still
-    // build the filter
+    // build the filter (the eval leg's NULL text: the c72 case below)
     ("c72_membership_gate", Seq("lang", "n_eval", "n_flagged", "n_hits_exact",
       "n_false_neg"), Seq()))
 
@@ -95,25 +98,13 @@ class NullTextSpec extends AnyFunSuite with SparkSpec {
   // v=0 ⇒ w=0 ⇒ tw=0 — an unguarded digest eval returns NULL and the
   // band boolean goes NULL against the oracle's literal TRUE). The
   // fixed c73 filters both in all three spellings.
-  private lazy val dirLang: String = {
-    val d = Files.createTempDirectory("nulllang").toFile
-    for (t <- SqlEntry.tableNames if t != "documents") {
-      Files.createSymbolicLink(
-        new java.io.File(d, s"$t.parquet").toPath,
-        Paths.get(s"/root/testdata/sf0.001/$t.parquet"))
-    }
-    Seq(
-      (1L, "alpha beta gamma", "en", "srcA", 16L),
-      (2L, "delta epsilon", "en", "srcA", 13L),
-      (3L, "uno dos tres cuatro", "es", "srcA", 19L),
-      (4L, "orphan words here", null.asInstanceOf[String], "srcA", 17L),
-      (5L, "", "zz", "srcB", 0L),        // lang with ONLY empty docs
-      (6L, "   ", "zz", "srcB", 3L))     // whitespace-only ⇒ v = 0 too
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(new java.io.File(d, "documents.parquet").toString)
-    d.getAbsolutePath
-  }
+  private lazy val dirLang: String = corpus("nulllang", Seq(
+    (1L, "alpha beta gamma", "en", "srcA", 16L),
+    (2L, "delta epsilon", "en", "srcA", 13L),
+    (3L, "uno dos tres cuatro", "es", "srcA", 19L),
+    (4L, "orphan words here", null.asInstanceOf[String], "srcA", 17L),
+    (5L, "", "zz", "srcB", 0L),        // lang with ONLY empty docs
+    (6L, "   ", "zz", "srcB", 3L)))     // whitespace-only ⇒ v = 0 too
 
   test("c73 on NULL/empty langs: three spellings agree; no NULL rows escape") {
     val df = SparkEntry.queries("c73_weighted_quantiles")(spark, dirLang)
@@ -136,6 +127,25 @@ class NullTextSpec extends AnyFunSuite with SparkSpec {
       r.getBoolean(r.fieldIndex("sketch_within_band"))),
       "the band boolean must be a literal TRUE, never NULL — the oracle " +
         "pins it as TRUE")
+  }
+
+  // c72's eval/probe leg with NULL text: docs 97 and 194 are the eval
+  // docs (doc_id % 97 = 0), and 97's text is NULL. The oracle keeps only
+  // non-null text, so the NULL-key probe row must drop out of the gate
+  // rather than count as an unflagged eval doc.
+  private lazy val dirEval: String = corpus("nulleval", Seq(
+    (1L, "same text", "en", "srcA", 9L),
+    (2L, "only doc", "en", "srcA", 8L),
+    (97L, null.asInstanceOf[String], "en", "srcA", 0L),
+    (194L, "same text", "en", "srcA", 9L)))
+
+  test("c72 on NULL eval text: the NULL-key probe row leaves the gate") {
+    val (cols, rows) = run("c72_membership_gate", dirEval)
+    assert(cols == Seq("lang", "n_eval", "n_flagged", "n_hits_exact", "n_false_neg"))
+    // doc 194's key was trained (doc 1), so it is flagged and an exact
+    // hit; doc 97 is not an eval row at all
+    assert(rows == Seq(Seq("en", 1L, 1L, 1L, 0L)),
+      s"c72 on a NULL-text eval corpus returned $rows")
   }
 
   test("c71 on NULL text: null keys leave registers, not fabricated estimates") {

@@ -39,30 +39,20 @@ class SqlEntrySpec extends AnyFunSuite with SparkSpec {
 
   private def c(name: String) = GraftBridge.expression(col(name))
 
-  test("curated map covers all four query families") {
-    val fams = SqlEntry.sparkSql.keySet.map(_.head)
-    assert(Set('a', 'b', 'c', 'd').subsetOf(fams))
-    assert(SqlEntry.sparkSql.size >= 5)
-  }
-
   test("the DataFrame-only remainder is exactly the documented excuse list") {
-    // Every text names a declared query, and the queries WITHOUT a text
-    // are precisely those the SqlEntry scaladoc names: the as-of trio
-    // (custom MergeAsOfExec operator) and the c-family apart from the
-    // five queries whose texts NullTextSpec and TimeSeriesSpec run. A
-    // new a/b/d query landing without a text — or a text for a query
-    // that no longer exists — fails here.
-    val pinnedC = Set("c45_hll_distinct", "c51_ts_similar_users", "c71_overlap_hll",
-      "c72_membership_gate", "c73_weighted_quantiles")
-    val declared = SparkEntry.queries.keySet
-    val excused = Set("b7_asof_events", "b7b_asof_forward", "b7c_asof_nearest") ++
-      declared.filter(_.startsWith("c")) -- pinnedC
-    assert((SqlEntry.sparkSql.keySet -- declared).isEmpty,
-      s"texts for undeclared queries: ${SqlEntry.sparkSql.keySet -- declared}")
-    assert((declared -- SqlEntry.sparkSql.keySet) == excused,
-      "SQL-text coverage drifted from the documented excuse list: " +
-        s"unexcused=${declared -- SqlEntry.sparkSql.keySet -- excused} " +
-        s"stale=${excused -- (declared -- SqlEntry.sparkSql.keySet)}")
+    // Every query outside the 13 names below is DataFrame-only. b1, c45,
+    // c71, c72 and c73 keep a SQL text because NullTextSpec runs them, c51
+    // because TimeSeriesSpec does; the a-family goes with them. A stray text, or a
+    // pinned text that went missing, fails here, as does a text for a
+    // query that no longer exists.
+    val kept = Set("a1_dup_dst", "a2_job_metrics", "a3_bin_pack", "a4_map_count",
+      "a5_relative_path", "a6_topk_files", "a7_status_rollup", "b1_exact_dedup",
+      "c45_hll_distinct", "c51_ts_similar_users", "c71_overlap_hll", "c72_membership_gate",
+      "c73_weighted_quantiles")
+    assert(SqlEntry.sparkSql.keySet == kept,
+      s"stray=${SqlEntry.sparkSql.keySet -- kept} missing=${kept -- SqlEntry.sparkSql.keySet}")
+    assert(SqlEntry.sparkSql.keySet.subsetOf(SparkEntry.queries.keySet),
+      s"texts for undeclared queries: ${SqlEntry.sparkSql.keySet -- SparkEntry.queries.keySet}")
   }
 
   for (name <- SqlEntry.sparkSql.keys.toSeq.sorted) {

@@ -70,11 +70,18 @@ class ProcessRunnerSpec extends AnyFunSuite {
 
   test("Executor throws on rejected exit code, accepts grep miss") {
     val sink = new ByteArrayOutputStream()
+    // the pumped exec path's sequence: run the argv, then check its exit
+    def execute(commandLine: String, stdin: String): ExecResult = {
+      val argv = CommandLine.translate(commandLine)
+      val res = ProcessRunner.run(argv, bytes(stdin), sink, sink)
+      ExitPolicy.check(argv, res.exitCode)
+      res
+    }
     intercept[IOException] {
-      Executor.execute("sh -c 'exit 3'", bytes(""), sink, sink)
+      execute("sh -c 'exit 3'", "")
     }
     // grep with no match exits 1 — accepted for bare grep
-    val res = Executor.execute("grep nomatch", bytes("other text\n"), sink, sink)
+    val res = execute("grep nomatch", "other text\n")
     assert(res.exitCode == 1)
   }
 }
