@@ -16,8 +16,13 @@ for sf in 0.001 0.01 $([ "${1:-}" = "--quick" ] || echo 0.1); do
   # a fresh directory per run: Verify logs a failing query and goes on,
   # so a reused one would hand selfcheck an earlier run's result for it
   out=$(mktemp -d "$tmp/verify_sf$sf.XXXXXX")
-  sbt -batch "runMain graft.Verify /root/testdata/sf$sf $out" 2>&1 \
-    | grep -E "\[verify\]" || true
+  # Verify names the queries that threw and exits 1
+  set +e
+  sbt -batch "runMain graft.Verify /root/testdata/sf$sf $out" > "$out.log" 2>&1
+  rc=$?
+  set -e
+  grep -E "\[verify\]" "$out.log" || true
+  [ "$rc" -eq 0 ] || { echo "Verify exited $rc at sf$sf"; exit 1; }
   python3 scripts/selfcheck.py "$out" "/root/testdata/sf$sf" | tail -2
 done
 
@@ -41,6 +46,23 @@ for f in a.txt b.txt sub/c.txt; do
   iconv -f iso8859-1 -t utf-8 < "$cli/src/$f" | cmp - "$cli/dst/$f" \
     || { echo "distexec output differs for $f"; exit 1; }
 done
+
+echo "=== distexec CLI smoke, failing files ==="
+# every file fails: exit 1, the counters say so, and the failure log
+# holds one FAIL line per file
+set +e
+sbt -batch "runMain graft.cli.Main $cli/src $cli/fail \"sh -c 'exit 7'\"" \
+  > "$cli/fout" 2> "$cli/ferr"
+rc=$?
+set -e
+grep -E "EXECUTED=|FAIL=" "$cli/fout" || true
+[ "$rc" -eq 1 ] || { echo "distexec exited $rc, want 1"; tail -20 "$cli/fout" "$cli/ferr"; exit 1; }
+grep -q "EXECUTED=0 FAIL=3" "$cli/fout" || { echo "counters line missing"; exit 1; }
+logs=$(find "$cli" "$cli/fail" -maxdepth 1 -type d -name "_distexec_logs_*")
+[ "$(echo "$logs" | grep -c .)" -eq 1 ] || { echo "want one failure log dir, got: $logs"; exit 1; }
+[ "$(cat "$logs"/part-* 2>/dev/null | grep -c "^FAIL ")" -eq 3 ] \
+  || { echo "failure log $logs lacks three FAIL lines"; exit 1; }
+[ -z "$(find "$cli" -name "_distexec_tmp_*")" ] || { echo "tmp left behind"; exit 1; }
 
 echo "=== perfbench harness self-tests ==="
 python3 perfbench/run.py --test

@@ -292,44 +292,65 @@ object Manifest {
     */
   private[graft] def plan(manifest: Dataset[FileEntry]): Plan = {
     val rows = manifest.rdd
-    val reduced = rows
-      .mapPartitions[(PlanKey, PlanVal)] { it =>
-        val buckets = mutable.HashMap.empty[(String, Int), Long]
-        var files, bytes, dirs = 0L
-        val names = it.flatMap { e =>
-          if (e.isDir) {
-            if (e.relativeDst != ".") dirs += 1
-            None
-          } else {
-            files += 1
-            bytes += e.length
-            val k = (e.root, bucket(e))
-            buckets(k) = buckets.getOrElse(k, 0L) + e.length
-            Some(NameKey(e.relativeDst) -> PlanVal(1, 0, 0, List(e.path)))
-          }
-        }
-        // `++` takes its argument by name: the subtotals are read after
-        // the last name has gone by
-        names ++ (buckets.iterator.map { case ((r, b), n) => BucketKey(r, b) -> PlanVal(0, n, 0, Nil) } ++
-          Iterator.single(TotalsKey -> PlanVal(files, bytes, dirs, Nil)))
-      }
+    assemble(rows
+      .mapPartitions(planFold)
       .reduceByKey(new HashPartitioner(math.max(1, rows.getNumPartitions)), _ + _)
-      .mapPartitions { it =>
-        // the largest name leaves first, so the queue keeps the smallest
-        val top = mutable.PriorityQueue.empty[(String, PlanVal)](
-          Ordering.by[(String, PlanVal), String](_._1)(CodePointOrder))
-        val subtotals = it.filter {
-          case (NameKey(name), v) =>
-            if (v.n > 1) {
-              top += name -> v
-              if (top.size > MaxDups) top.dequeue()
-            }
-            false
-          case _ => true
-        }.toVector
-        subtotals.iterator ++ top.iterator.map { case (name, v) => NameKey(name) -> v }
+      .mapPartitions(topDups)
+      .collect().toSeq)
+  }
+
+  /** [[plan]] over rows already held on the driver, with no Spark job:
+    * the distributed job's fold, merge and duplicate cut, run over one
+    * partition.
+    */
+  private[graft] def plan(rows: Seq[FileEntry]): Plan = assemble(topDups(
+    planFold(rows.iterator).toSeq.groupMapReduce(_._1)(_._2)(_ + _).iterator).toSeq)
+
+  /** One partition's planning records: each file's name, then the
+    * partition's (root, bucket) byte subtotals and its totals.
+    */
+  private def planFold(it: Iterator[FileEntry]): Iterator[(PlanKey, PlanVal)] = {
+    val buckets = mutable.HashMap.empty[(String, Int), Long]
+    var files, bytes, dirs = 0L
+    val names = it.flatMap { e =>
+      if (e.isDir) {
+        if (e.relativeDst != ".") dirs += 1
+        None
+      } else {
+        files += 1
+        bytes += e.length
+        val k = (e.root, bucket(e))
+        buckets(k) = buckets.getOrElse(k, 0L) + e.length
+        Some(NameKey(e.relativeDst) -> PlanVal(1, 0, 0, List(e.path)))
       }
-      .collect()
+    }
+    // `++` takes its argument by name: the subtotals are read after
+    // the last name has gone by
+    names ++ (buckets.iterator.map { case ((r, b), n) => BucketKey(r, b) -> PlanVal(0, n, 0, Nil) } ++
+      Iterator.single(TotalsKey -> PlanVal(files, bytes, dirs, Nil)))
+  }
+
+  /** Merged planning records with every unique name dropped and at most
+    * [[MaxDups]] duplicated names kept, the smallest.
+    */
+  private def topDups(it: Iterator[(PlanKey, PlanVal)]): Iterator[(PlanKey, PlanVal)] = {
+    // the largest name leaves first, so the queue keeps the smallest
+    val top = mutable.PriorityQueue.empty[(String, PlanVal)](
+      Ordering.by[(String, PlanVal), String](_._1)(CodePointOrder))
+    val subtotals = it.filter {
+      case (NameKey(name), v) =>
+        if (v.n > 1) {
+          top += name -> v
+          if (top.size > MaxDups) top.dequeue()
+        }
+        false
+      case _ => true
+    }.toVector
+    subtotals.iterator ++ top.iterator.map { case (name, v) => NameKey(name) -> v }
+  }
+
+  /** The [[Plan]] from every partition's [[topDups]] output. */
+  private def assemble(reduced: Seq[(PlanKey, PlanVal)]): Plan = {
     var totals = PlanVal(0, 0, 0, Nil)
     val dups = mutable.ArrayBuffer.empty[(String, Seq[String])]
     val buckets = mutable.ArrayBuffer.empty[((String, Int), Long)]
@@ -378,7 +399,8 @@ object Manifest {
     * offsets. (2) One sort within partitions keyed (bucket, path) gives
     * each bucket's local running sum: `cum = local_cum + offset`. Bit-
     * identical bins to the serial formulation (asserted in ManifestSpec),
-    * with per-bucket parallelism.
+    * with per-bucket parallelism. Rows already held on the driver take
+    * the same two steps there through `plan(rows)` and `binned(rows, ..)`.
     *
     * Returns the files with columns root, path, relativeDst, length,
     * isDir, modificationTime, cum and bin.
@@ -400,37 +422,62 @@ object Manifest {
     StructField("cum", LongType),
     StructField("bin", LongType)))
 
+  private val ByBucketThenPath: Ordering[(Int, String)] = Ordering.Tuple2(Ordering.Int, CodePointOrder)
+
   /** [[binPack]] over a finished planning pass: each file with its `cum`
     * and `bin`. The buckets are numbered on the driver and bucket i sorts
     * on partition i mod n, so no bucket is split and none is hashed.
     */
   private[graft] def binned(manifest: Dataset[FileEntry], plan: Plan, targetBytes: Long)
       : RDD[(FileEntry, Long, Long)] = {
-    val index = plan.bucketOffsets.map(_._1).zipWithIndex.toMap
-    val offsets = plan.bucketOffsets.map(_._2).toArray
-    val parts = math.max(1, math.min(offsets.length, manifest.sparkSession.sparkContext.defaultParallelism))
-    implicit val byBucketThenPath: Ordering[(Int, String)] = Ordering.Tuple2(Ordering.Int, CodePointOrder)
+    val parts = math.max(1, math.min(plan.bucketOffsets.length,
+      manifest.sparkSession.sparkContext.defaultParallelism))
+    implicit val byBucketThenPath: Ordering[(Int, String)] = ByBucketThenPath
     manifest.rdd
-      .flatMap { e =>
-        if (e.isDir) None
-        else {
-          val b = index.getOrElse((e.root, bucket(e)), throw new IllegalStateException(
-            s"${e.path} is in a bucket the planning pass did not see: the manifest changed between passes"))
-          Some((b, e.path) -> e)
-        }
-      }
+      .flatMap(bucketed(plan))
       .repartitionAndSortWithinPartitions(new ModPartitioner(parts))
-      .mapPartitions { it =>
-        var cur = -1
-        var lcum = 0L
-        it.map { case ((b, _), e) =>
-          if (b != cur) { cur = b; lcum = 0L }
-          lcum += e.length
-          val cum = lcum + offsets(b)
-          // Spark's `floor(long / long)`: a double division, then floor
-          (e, cum, math.floor((cum - e.length).toDouble / targetBytes).toLong)
-        }
+      .mapPartitions(runningBins(plan, targetBytes))
+  }
+
+  /** [[binned]] over rows held on the driver, sorted there: the same
+    * keys and running sums, in (bucket, path) order.
+    */
+  private[graft] def binned(rows: Seq[FileEntry], plan: Plan, targetBytes: Long)
+      : Seq[(FileEntry, Long, Long)] =
+    runningBins(plan, targetBytes)(rows.flatMap(bucketed(plan)).sortBy(_._1)(ByBucketThenPath).iterator).toSeq
+
+  /** A file keyed by its bucket's number in `plan` and its path; `None`
+    * for a directory.
+    */
+  private def bucketed(plan: Plan): FileEntry => Option[((Int, String), FileEntry)] = {
+    val index = plan.bucketOffsets.map(_._1).zipWithIndex.toMap
+    e =>
+      if (e.isDir) None
+      else {
+        val b = index.getOrElse((e.root, bucket(e)), throw new IllegalStateException(
+          s"${e.path} is in a bucket the planning pass did not see: the manifest changed between passes"))
+        Some((b, e.path) -> e)
       }
+  }
+
+  /** Each file's `cum` and `bin` from [[bucketed]] files whose buckets
+    * come whole and each in path order: the bucket's running byte sum
+    * plus its offset in `plan`.
+    */
+  private def runningBins(plan: Plan, targetBytes: Long)
+      : Iterator[((Int, String), FileEntry)] => Iterator[(FileEntry, Long, Long)] = {
+    val offsets = plan.bucketOffsets.map(_._2).toArray
+    it => {
+      var cur = -1
+      var lcum = 0L
+      it.map { case ((b, _), e) =>
+        if (b != cur) { cur = b; lcum = 0L }
+        lcum += e.length
+        val cum = lcum + offsets(b)
+        // Spark's `floor(long / long)`: a double division, then floor
+        (e, cum, math.floor((cum - e.length).toDouble / targetBytes).toLong)
+      }
+    }
   }
 
   /** Map-count rule: `max(min(fileCount, cap), 1)` — file-count based, not

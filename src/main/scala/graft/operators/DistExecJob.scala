@@ -53,9 +53,14 @@ final case class DistExecOptions(
   * size-weighted binning ([[Manifest.binPack]]) with bin b placed on
   * task b mod the task count; and the per-file exec runs inside
   * `mapPartitions` (opaque to Catalyst by design — process spawn
-  * dominates cost, like `RDD.pipe` but per-file and binary-safe). The
-  * planning and accounting are RDD passes, so a run plus its counters
-  * and failure log takes five Spark jobs.
+  * dominates cost, like `RDD.pipe` but per-file and binary-safe), each
+  * task also making its share of the mirrored directories. Like the
+  * reference, a manifest listed on the driver ([[Manifest.build]]) is
+  * planned and binned there and its status is kept there, so a run
+  * plus its counters and failure log is ONE Spark job, two when a file
+  * fails. A manifest listed on executors ([[Manifest.listDistributed]])
+  * is planned by a Spark job, binned by the exec job's shuffle, and its
+  * status checkpointed and folded by Spark jobs.
   *
   * Scale/durability deltas vs the reference:
   *  - tmp paths are task-attempt-unique + atomic rename, so speculative
@@ -132,10 +137,20 @@ object DistExecJob {
     * IMPORTANT: build the manifest with the SAME `special` value
     * [[run]] would compute ([[manifestSpecial]]) or the root-choice
     * semantics (nest under dst/<srcname> vs contents-into-dst) will not
-    * match the reference's. The manifest is read by each pass (planning,
-    * directories, exec), so it must read the same rows every time, as the
-    * outputs of [[Manifest.build]] (rows held on the driver) and
-    * [[Manifest.listDistributed]] (checkpointed once) do.
+    * match the reference's.
+    *
+    * A manifest held on the driver (`manifest.isLocal`, as every
+    * [[Manifest.build]] output is) is planned, binned and placed there
+    * from one `collect()`, and the exec job is the run's only Spark job:
+    * its statuses come back to the driver, at most one row per file,
+    * and are returned as a Dataset held there. Any other manifest, such
+    * as [[Manifest.listDistributed]]'s, is read twice, by the planning
+    * job and by the exec job's binning shuffle, so it must read the same
+    * rows every time (that one is checkpointed), and its status is
+    * `localCheckpoint`ed. Either way the mirrored directories are made
+    * by the exec tasks, spread over them by name (a file published
+    * before its directory makes the missing parent), and the returned
+    * Dataset never re-runs a child process.
     */
   def runManifest(
       spark: SparkSession,
@@ -146,10 +161,12 @@ object DistExecJob {
     import spark.implicits._
     CommandLine.translate(command) // fail fast on unbalanced quotes (R1/R11)
 
-    // One pass plans the job, before anything under dst is created: the
-    // duplicate check, the counts and the bucket byte totals binning
-    // needs. The driver sees those, never the manifest (SURVEY R5).
-    val plan = Manifest.plan(manifest)
+    // Plan the job before anything under dst is created: the duplicate
+    // check, the counts and the bucket byte totals binning needs. For a
+    // manifest not held on the driver, one Spark job does it and the
+    // driver sees those figures, never the manifest (SURVEY R5).
+    val rows = if (manifest.isLocal) Some(manifest.collect().toSeq) else None
+    val plan = rows.fold(Manifest.plan(manifest))(Manifest.plan)
     plan.checkDuplication()
 
     val conf = spark.sparkContext.hadoopConfiguration
@@ -170,15 +187,9 @@ object DistExecJob {
     val confEntries = Manifest.hadoopConfEntries(conf)
     val dstStr = dstPath.toString
     // Dest-dir semantics (DistExec.java:543-545,623-628): materialize the
-    // dst root when more than one source entry lands in it, then every
-    // manifest dir (preserving EMPTY dirs) — created from executors, so a
-    // million-directory tree never funnels through the driver.
+    // dst root when more than one source entry lands in it; the exec
+    // tasks make every manifest dir below it (EMPTY dirs too).
     if (!special) dstFs.mkdirs(dstPath)
-    if (plan.dirCount > 0) manifest.rdd.foreachPartition { (it: Iterator[FileEntry]) =>
-      val root = new Path(dstStr)
-      val fs = DstFileSystem.taskPrivate(dstStr, Manifest.restoreConf(confEntries))
-      it.foreach(d => if (d.isDir && d.relativeDst != ".") fs.mkdirs(new Path(root, d.relativeDst)))
-    }
 
     val jobId = java.lang.Long.toString(System.nanoTime(), 36)
     val tmpRoot = new Path(if (special) dstPath.getParent else dstPath, s"_distexec_tmp_$jobId")
@@ -187,46 +198,73 @@ object DistExecJob {
       options.maxMaps.getOrElse(sessionMapCap(spark)))
     val target = math.max(totalBytes / numTasks, 1L)
 
-    // bin b runs on task b mod numTasks
-    val byTask = Manifest.binned(manifest, plan, target)
-      .map { case (e, _, bin) => (bin, e) }
-      .partitionBy(new ModPartitioner(numTasks))
-      .values
+    // Each row's task is its key mod numTasks: bin b runs on task b mod
+    // numTasks, and the directories spread over the tasks by name.
+    val toTask = new ModPartitioner(numTasks)
+    val mirrored = (e: FileEntry) => e.isDir && e.relativeDst != "."
+    val dirKey = (d: FileEntry) => java.lang.Math.floorMod(d.relativeDst.hashCode, numTasks).toLong
 
     val cmd = command
     val redirect = options.redirectErrorToOut
     val tmpRootStr = tmpRoot.toString
     val isSpecial = special
-    val statuses = byTask.mapPartitions { it =>
+    val execute = (it: Iterator[FileEntry]) => {
       val taskConf = Manifest.restoreConf(confEntries)
       val dstFsTask = DstFileSystem.taskPrivate(dstStr, taskConf)
-      // started at the task's first local file; killed, with every
-      // process it started, when the task ends however it ends
+      // the helper starts at the task's first local file; when the task
+      // ends, however it ends, it is killed with every process it
+      // started and the attempt's tmp files are removed
       val shell = new ShellHelper
-      TaskContext.get().addTaskCompletionListener[Unit](_ => shell.close())
       val exec = new TaskExec(taskConf, dstFsTask, dstStr, tmpRootStr, taskAttempt(),
         cmd, redirect, isSpecial, shell)
-      it.map(exec.executeOne)
+      TaskContext.get().addTaskCompletionListener[Unit] { _ => shell.close(); exec.close() }
+      val root = new Path(dstStr)
+      it.flatMap { e =>
+        if (e.isDir) { dstFsTask.mkdirs(new Path(root, e.relativeDst)); None }
+        else Some(exec.executeOne(e))
+      }
     }
 
-    // Eager + lineage-truncated: re-running the returned Dataset must NOT
-    // re-execute child processes.
-    val out = spark.createDataset(statuses).localCheckpoint(true)
+    val out = rows match {
+      case Some(rs) =>
+        // files in (bucket, path) order, so each bin's in path order
+        val byTask = (rs.filter(mirrored).map(d => dirKey(d) -> d) ++
+          Manifest.binned(rs, plan, target).map { case (e, _, bin) => bin -> e })
+          .groupMap(k => toTask.getPartition(k._1))(_._2)
+        val tasks = (0 until numTasks).map(i => byTask.getOrElse(i, Nil))
+        spark.createDataset(
+          spark.sparkContext.parallelize(tasks, numTasks).flatMap(identity).mapPartitions(execute)
+            .collect().toSeq)
+      case None =>
+        val byTask = Manifest.binned(manifest, plan, target)
+          .map { case (e, _, bin) => (bin, e) }
+          .union(manifest.rdd.filter(mirrored).map(d => (dirKey(d), d)))
+          .partitionBy(toTask)
+          .values
+        // Eager + lineage-truncated: re-running the returned Dataset
+        // must NOT re-execute child processes.
+        spark.createDataset(byTask.mapPartitions(execute)).localCheckpoint(true)
+    }
     try dstFs.delete(tmpRoot, true) catch { case _: IOException => () }
     out
   }
 
   /** Aggregate the reference's four counters (EXECUTED, FAIL,
-    * BYTESEXECUTED, BYTESWRITTEN) from a status Dataset: one stage, each
-    * task folds its partition and the driver adds the partials.
+    * BYTESEXECUTED, BYTESWRITTEN) from a status Dataset: on the driver
+    * for a status held there ([[runManifest]] over a driver-held
+    * manifest), with no Spark job; otherwise in one stage, each task
+    * folding its partition and the driver adding the partials.
     */
-  def counters(status: Dataset[ExecStatus]): ExecCounters =
-    status.rdd
-      .map(s => ExecCounters(if (s.ok) 1L else 0L, if (s.ok) 0L else 1L, s.bytesIn, s.bytesOut))
-      .fold(ExecCounters(0L, 0L, 0L, 0L)) { (a, b) =>
-        ExecCounters(a.executed + b.executed, a.failed + b.failed,
-          a.bytesExecuted + b.bytesExecuted, a.bytesWritten + b.bytesWritten)
-      }
+  def counters(status: Dataset[ExecStatus]): ExecCounters = {
+    def one(s: ExecStatus) =
+      ExecCounters(if (s.ok) 1L else 0L, if (s.ok) 0L else 1L, s.bytesIn, s.bytesOut)
+    def add(a: ExecCounters, b: ExecCounters) =
+      ExecCounters(a.executed + b.executed, a.failed + b.failed,
+        a.bytesExecuted + b.bytesExecuted, a.bytesWritten + b.bytesWritten)
+    val zero = ExecCounters(0L, 0L, 0L, 0L)
+    if (status.isLocal) status.collect().iterator.map(one).foldLeft(zero)(add)
+    else status.rdd.map(one).fold(zero)(add)
+  }
 
   /** `-singleOut` (README-promised, never implemented in the reference —
     * README.md:48, TODO at DistExec.java:453): combine all per-file stdout
@@ -293,7 +331,8 @@ object DistExecJob {
     * Each task with failures writes its FAIL lines to one `part-NNNNN`
     * text file, published by the TaskExec pattern (attempt-unique tmp
     * then rename) through [[DstFileSystem.taskPrivate]]; no output
-    * committer, no `.crc` sidecars.
+    * committer, no `.crc` sidecars. A status held on the driver is read
+    * there first, and the write job runs only when a row failed.
     */
   def writeFailureLog(spark: SparkSession, dst: String, status: Dataset[ExecStatus]): Path = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -306,20 +345,23 @@ object DistExecJob {
     fs.mkdirs(logPath)
     val confEntries = Manifest.hadoopConfEntries(conf)
     val logStr = logPath.toString
-    status.rdd.foreachPartition { (it: Iterator[ExecStatus]) =>
-      val fails = it.filter(!_.ok)
-      if (fails.hasNext) {
-        val root = new Path(logStr)
-        val taskFs = DstFileSystem.taskPrivate(logStr, Manifest.restoreConf(confEntries))
-        val part = f"part-${TaskContext.getPartitionId()}%05d"
-        // '_'-prefixed: readers of the log dir skip a tmp a killed task left
-        val tmp = new Path(root, s"_tmp_${part}_${taskAttempt()}")
-        val out = taskFs.create(tmp, true)
-        try fails.foreach(s => out.write(s"${s.error}\n".getBytes(StandardCharsets.UTF_8)))
-        finally out.close()
-        rename(taskFs, tmp, new Path(root, part))
+    // a status held on the driver is read there: the write job runs
+    // only when one of its rows failed
+    if (!status.isLocal || status.collect().exists(!_.ok))
+      status.rdd.foreachPartition { (it: Iterator[ExecStatus]) =>
+        val fails = it.filter(!_.ok)
+        if (fails.hasNext) {
+          val root = new Path(logStr)
+          val taskFs = DstFileSystem.taskPrivate(logStr, Manifest.restoreConf(confEntries))
+          val part = f"part-${TaskContext.getPartitionId()}%05d"
+          // '_'-prefixed: readers of the log dir skip a tmp a killed task left
+          val tmp = new Path(root, s"_tmp_${part}_${taskAttempt()}")
+          val out = taskFs.create(tmp, true)
+          try fails.foreach(s => out.write(s"${s.error}\n".getBytes(StandardCharsets.UTF_8)))
+          finally out.close()
+          rename(taskFs, tmp, new Path(root, part))
+        }
       }
-    }
     logPath
   }
 
@@ -354,14 +396,16 @@ object DistExecJob {
   /** One task attempt's per-file exec, two ways:
     *  - local, when the source is `file:` and `dstFs` is the local
     *    instance [[DstFileSystem.taskPrivate]] makes: `shell` runs the
-    *    child with kernel redirects from the source into the flat tmp
-    *    files `<tmpRoot>/<attempt>/<n>` and `<n>.stderr`, each published
-    *    by one `rename(2)`;
+    *    child with kernel redirects from the source into the tmp files
+    *    `<tmpRoot>/<attempt>/out` and `err`; a non-empty one is published
+    *    by one `rename(2)`, an empty one stays for the next file's
+    *    redirect to truncate (cheaper than creating a new file) until
+    *    [[close]];
     *  - pumped, for every other file: [[ProcessRunner]] streams the
     *    source through the child into `<tmpRoot>/<attempt>/<relativeDst>`,
     *    published through `dstFs`.
-    * Either way an empty stream makes no file, a rejected exit code or
-    * any error is a FAIL row, and the file's tmp files are removed.
+    * Either way an empty stream makes no file, and a rejected exit code
+    * or any error is a FAIL row whose tmp files are removed.
     * private[operators] so DistExecJobSpec can drive one attempt, or
     * race two attempts of the same file (the speculation scenario).
     */
@@ -381,6 +425,8 @@ object DistExecJob {
     private def nio(p: String): JPath = Paths.get(dstFs.makeQualified(new Path(p)).toUri)
     private lazy val localDst = nio(dst)
     private lazy val localTmp = nio(tmpRoot).resolve(attempt)
+    private lazy val out = localTmp.resolve("out")
+    private lazy val err = localTmp.resolve("err")
     // the mode dstFs.create gives a file
     private val fileMode =
       FsPermission.getFileDefault.applyUMask(FsPermission.getUMask(conf)).toShort & 0xfff
@@ -395,8 +441,6 @@ object DistExecJob {
 
     private def executeLocal(e: FileEntry, src: String): ExecStatus = {
       n += 1
-      val out = localTmp.resolve(n.toString)
-      val err = localTmp.resolve(s"$n.stderr")
       try {
         if (n == 1 && !dstFs.mkdirs(new Path(localTmp.toUri)))
           throw new IOException(s"cannot create $localTmp")
@@ -416,27 +460,33 @@ object DistExecJob {
     }
 
     /** Publish `tmp` at `to` with the umask's mode, by one `rename(2)`
-      * that replaces an existing file; an empty `tmp` is deleted
+      * that replaces an existing file; an empty `tmp` is left in place
       * instead (the reference's no-file-for-empty-output rule).
       * Returns its size.
       */
     private def publish(tmp: JPath, to: JPath): Long = {
       val attrs = Files.readAttributes(tmp, "unix:size,mode")
       val size = attrs.get("size").asInstanceOf[Long]
-      if (size == 0L) Files.delete(tmp)
-      else {
+      if (size > 0L) {
         if ((attrs.get("mode").asInstanceOf[Int] & 0xfff) != fileMode)
           Files.setAttribute(tmp, "unix:mode", Int.box(fileMode))
         try Files.move(tmp, to, StandardCopyOption.ATOMIC_MOVE)
         catch {
-          // only the single-file case's parent can be missing: the
-          // directory job made every other one
+          // the parent is missing until the task that makes it (the
+          // exec tasks share the manifest's directories) has run, and
+          // always in the single-file case
           case _: NoSuchFileException =>
             dstFs.mkdirs(new Path(to.getParent.toUri))
             Files.move(tmp, to, StandardCopyOption.ATOMIC_MOVE)
         }
       }
       size
+    }
+
+    /** Remove what the local path left in the attempt's tmp directory. */
+    def close(): Unit = if (n > 0) {
+      try { Files.deleteIfExists(out); Files.deleteIfExists(err); Files.deleteIfExists(localTmp) }
+      catch { case _: IOException => () }
     }
 
     private def executePumped(e: FileEntry, srcPath: Path): ExecStatus = {

@@ -131,17 +131,18 @@ class ManifestSpec extends AnyFunSuite with SparkSpec {
     }
   }
 
+  // Mixed-prefix tree: several first-char buckets per root + a file root
+  private val mixedPrefixFiles =
+    (1 to 40).map(i => FileEntry(s"/r/a$i", "/r", s"a$i", (i % 5 + 1) * 7L, isDir = false, 0L)) ++
+      (1 to 40).map(i => FileEntry(s"/r/m$i", "/r", s"m$i", (i % 3 + 1) * 11L, isDir = false, 0L)) ++
+      (1 to 40).map(i => FileEntry(s"/r/z$i", "/r", s"z$i", (i % 7 + 1) * 5L, isDir = false, 0L)) ++
+      Seq(FileEntry("/single.bin", "/single.bin", "single.bin", 42L, isDir = false, 0L))
+
   test("bin packing: two-level prefix sum equals the serial per-root window") {
     import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    // Mixed-prefix tree: several first-char buckets per root + a file root
-    val files = (
-      (1 to 40).map(i => FileEntry(s"/r/a$i", "/r", s"a$i", (i % 5 + 1) * 7L, isDir = false, 0L)) ++
-      (1 to 40).map(i => FileEntry(s"/r/m$i", "/r", s"m$i", (i % 3 + 1) * 11L, isDir = false, 0L)) ++
-      (1 to 40).map(i => FileEntry(s"/r/z$i", "/r", s"z$i", (i % 7 + 1) * 5L, isDir = false, 0L)) ++
-      Seq(FileEntry("/single.bin", "/single.bin", "single.bin", 42L, isDir = false, 0L)))
-    val ds = spark.createDataset(files)
+    val ds = spark.createDataset(mixedPrefixFiles)
     val twoLevel = Manifest.binPack(ds, 50L)
       .select($"path", $"cum", $"bin").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
@@ -153,6 +154,39 @@ class ManifestSpec extends AnyFunSuite with SparkSpec {
       .select($"path", $"cum", $"bin").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
     assert(twoLevel == serial)
+  }
+
+  test("the driver's plan and bins equal the distributed ones over the same rows") {
+    import spark.implicits._
+    def same(rows: Seq[FileEntry]): Unit = {
+      val spread = spark.createDataset(spark.sparkContext.parallelize(rows, 3))
+      assert(!spread.isLocal)
+      val local = Manifest.plan(rows)
+      val dist = Manifest.plan(spread)
+      def message(p: Manifest.Plan) = scala.util.Try(p.checkDuplication()).failed.toOption.map(_.getMessage)
+      assert(message(local) == message(dist))
+      assert(local == dist)
+      val target = math.max(local.totalBytes / 3, 1L)
+      def bins(b: Iterable[(FileEntry, Long, Long)]) = b.map { case (e, cum, bin) => (e.path, cum, bin) }.toSet
+      val driverBins = bins(Manifest.binned(rows, local, target))
+      assert(driverBins.size == local.fileCount)
+      assert(driverBins == bins(Manifest.binned(spread, dist, target).collect()))
+    }
+    def tree(roots: Seq[JPath], special: Boolean = true) =
+      Manifest.build(spark, roots.map(_.toString), special).collect().toSeq
+    same(tree(Seq(mkTree())))
+    val skewed = Files.createTempDirectory("graft-manifest-skew")
+    for (i <- 0 until 4 * spark.sparkContext.defaultParallelism + 3) {
+      val d = Files.createDirectories(skewed.resolve(s"top/d$i"))
+      Files.writeString(d.resolve("f.txt"), s"$i\n")
+    }
+    same(tree(Seq(skewed)))
+    same(tree(Seq(mkTree(), mkTree()), special = false))
+    same(tree(Seq(mkTree().resolve("a.txt"))))
+    val dupRoots = Seq.fill(2)(Files.createTempDirectory("graft-manifest-dup"))
+    for (r <- dupRoots; i <- 24 to 0 by -1) Files.writeString(r.resolve(f"d$i%02d.txt"), s"$i\n")
+    same(tree(dupRoots))
+    same(mixedPrefixFiles)
   }
 
   test("map count rule: min(files, cap), at least 1") {

@@ -14,6 +14,7 @@ import graft.fs.{DstFileSystem, DuplicationException, FileEntry, Manifest}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{LocalFileSystem, RawLocalFileSystem}
 import org.apache.spark.ListenerBusAccess
+import org.apache.spark.sql.Dataset
 import org.scalatest.funsuite.AnyFunSuite
 
 class DistExecJobSpec extends AnyFunSuite with SparkSpec {
@@ -33,6 +34,21 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
   private def bothPaths(name: String)(body: (JPath => String) => Unit): Unit = {
     test(name)(body(_.toString))
     test(s"$name (pump path)")(body(viaPump))
+  }
+
+  /** A case run over both kinds of manifest: as `name` over
+    * [[Manifest.build]]'s, held on the driver, and as
+    * `name (listDistributed manifest)` over [[Manifest.listDistributed]]'s.
+    * `body` gets a runManifest call over the chosen kind.
+    */
+  private def bothManifests(name: String)(
+      body: ((Seq[String], String, String, DistExecOptions) => Dataset[ExecStatus]) => Unit): Unit = {
+    def over(list: (Seq[String], Boolean) => Dataset[FileEntry]) =
+      (srcs: Seq[String], dst: String, cmd: String, options: DistExecOptions) =>
+        DistExecJob.runManifest(spark, list(srcs, DistExecJob.manifestSpecial(spark, srcs, dst)),
+          dst, cmd, options)
+    test(name)(body(over(Manifest.build(spark, _, _))))
+    test(s"$name (listDistributed manifest)")(body(over(Manifest.listDistributed(spark, _, _))))
   }
 
   /** The live shell helpers this JVM started. */
@@ -266,17 +282,21 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
     assert(graft.cli.Main.failureEcho(ok).isEmpty)
   }
 
-  test("default map cap tracks the session, not a hard-coded node count") {
+  bothManifests("default map cap tracks the session, not a hard-coded node count") { run =>
     val sc = spark.sparkContext
     // local[4]: one "node" → 20 maps/node, floored at defaultParallelism
     assert(DistExecJob.sessionMapCap(spark) ==
       math.max(DistExecJob.MaxMapsPerNode, sc.defaultParallelism))
-    // explicit -m / options still win over the derived cap
+    // explicit -m / options still win over the derived cap; the exec
+    // stage is the last one the run submits
     val src = mkTree()
     val dst = tmpDst()
-    val status = DistExecJob.run(spark, Seq(src.toString), dst.toString, "cat",
-      DistExecOptions(maxMaps = Some(1)))
-    assert(status.rdd.getNumPartitions == 1, "-m pins the task count")
+    var status: Dataset[ExecStatus] = null
+    val stages = ListenerBusAccess.stageTasks(sc) {
+      status = run(Seq(src.toString), dst.toString, "cat", DistExecOptions(maxMaps = Some(1)))
+    }
+    assert(stages.last == 1, s"-m pins the task count: $stages")
+    assert(status.collect().count(_.ok) == 3)
   }
 
   test("failure log dir: FAIL rows land in _distexec_logs_<id> (inside dst dir)") {
@@ -302,25 +322,79 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
       names)
   }
 
-  test("exact placement: 8 equal-size files at maxMaps 8 give every task one file") {
+  bothManifests("exact placement: 8 equal-size files at maxMaps 8 give every task one file") { run =>
     val src = Files.createTempDirectory("graft-exec-place")
     (0 until 8).foreach(i => Files.writeString(src.resolve(s"f$i.txt"), "0123456789\n"))
     val dst = tmpDst()
-    val status = DistExecJob.run(spark, Seq(src.toString), dst.toString, "cat",
-      DistExecOptions(maxMaps = Some(8)))
-    val perTask = status.rdd.mapPartitions(it => Iterator(it.size)).collect().toSeq
-    assert(perTask == Seq.fill(8)(1), perTask)
+    // each task's files run from its own shell helper, the child's parent
+    val stages = ListenerBusAccess.stageTasks(spark.sparkContext) {
+      run(Seq(src.toString), dst.toString, "sh -c 'echo $PPID'", DistExecOptions(maxMaps = Some(8)))
+    }
+    assert(stages.last == 8, stages)
+    val helperOf = (0 until 8).map(i => Files.readString(dst.resolve(s"f$i.txt")).trim)
+    val perTask = helperOf.groupBy(identity).values.map(_.size).toSeq
+    assert(perTask == Seq.fill(8)(1), helperOf)
   }
 
   test("job budget: run + counters + failure log take at most 6 Spark jobs") {
+    // over a manifest listed on executors: planning, exec, counters and
+    // failure log each run a job
     val src = mkTree()
     val dst = tmpDst()
+    val srcs = Seq(src.toString)
+    val manifest = Manifest.listDistributed(spark, srcs, DistExecJob.manifestSpecial(spark, srcs, dst.toString))
     val jobs = ListenerBusAccess.jobCount(spark.sparkContext) {
-      val status = DistExecJob.run(spark, Seq(src.toString), dst.toString, "cat")
+      val status = DistExecJob.runManifest(spark, manifest, dst.toString, "cat")
       assert(DistExecJob.counters(status).executed == 3)
       DistExecJob.writeFailureLog(spark, dst.toString, status)
     }
     assert(jobs > 0 && jobs <= 6, s"$jobs Spark jobs")
+  }
+
+  test("one job: over a driver-held manifest, run + counters + failure log take 1 Spark job, 2 when a file fails") {
+    val src = mkTree()
+    def jobs(command: String): (Int, Seq[String]) = {
+      val dst = tmpDst()
+      var log: org.apache.hadoop.fs.Path = null
+      val n = ListenerBusAccess.jobCount(spark.sparkContext) {
+        val status = DistExecJob.run(spark, Seq(src.toString), dst.toString, command)
+        val c = DistExecJob.counters(status)
+        assert(c.executed + c.failed == 3)
+        log = DistExecJob.writeFailureLog(spark, dst.toString, status)
+      }
+      val logDir = dst.resolve(log.getName)
+      (n, walk(logDir).filter(Files.isRegularFile(_)).flatMap(Files.readAllLines(_).asScala))
+    }
+    assert(jobs("cat") == (1, Nil))
+    // exit 1 of /bin/grep is a failure: b.txt holds no match
+    val (n, lines) = jobs("/bin/grep match")
+    assert(n == 2 && lines.size == 1 && lines.head.startsWith("FAIL b.txt : "), (n, lines))
+  }
+
+  bothManifests("an empty source directory is mirrored") { run =>
+    val src = Files.createTempDirectory("graft-exec-emptysrc")
+    Files.createDirectories(src.resolve("a/b"))
+    Files.createDirectories(src.resolve("c"))
+    val dst = tmpDst()
+    assert(run(Seq(src.toString), dst.toString, "cat", DistExecOptions()).collect().isEmpty)
+    val left = walk(dst).map(dst.relativize(_).toString).toSet
+    assert(left == Set("", "a", "a/b", "c"), left)
+  }
+
+  test("reading a driver-held status twice never re-runs a child") {
+    val src = mkTree()
+    val dst = tmpDst()
+    val runs = Files.createTempFile("graft-exec-runs", ".txt")
+    // sh exits with grep's status: 1 for b.txt, a failure
+    val status = DistExecJob.run(spark, Seq(src.toString), dst.toString,
+      s"sh -c 'echo x >> $runs; grep match'")
+    val want = ExecCounters(executed = 2, failed = 1,
+      bytesExecuted = Files.size(src.resolve("a.txt")) + Files.size(src.resolve("sub/c.txt")),
+      bytesWritten = "match me\nmatch too\n".length)
+    assert(DistExecJob.counters(status) == want)
+    assert(DistExecJob.counters(status) == want)
+    assert(graft.cli.Main.failureEcho(status).map(_.takeWhile(_ != ':')) == Seq("FAIL b.txt "))
+    assert(Files.readAllLines(runs).size == 3)
   }
 
   test("runManifest on a duplicated manifest throws and leaves dst absent") {
@@ -454,7 +528,7 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
             tmpRoot, attempt, "cat", redirectErrorToOut = false,
             special = false, shell)
           barrier.await()
-          try results.add(exec.executeOne(entry)) finally shell.close()
+          try results.add(exec.executeOne(entry)) finally { shell.close(); exec.close() }
         })
       }
       threads.foreach(_.start()); threads.foreach(_.join())
@@ -597,8 +671,27 @@ class DistExecJobSpec extends AnyFunSuite with SparkSpec {
       assert(rows(1).error.contains("shell helper"), rows(1))
       assert(Files.readString(dst.resolve("one.txt")) == "one\n")
       assert(Files.readString(dst.resolve("three.txt")) == "three\n")
+      exec.close()
       val files = walk(dst).filter(Files.isRegularFile(_)).map(dst.relativize(_).toString).toSet
       assert(files == Set("one.txt", "three.txt"), files)
+    } finally shell.close()
+  }
+
+  test("a task reuses its empty tmp file, and close removes its tmp files") {
+    val src = mkTree()
+    val dst = Files.createDirectories(tmpDst())
+    val shell = new ShellHelper
+    val exec = taskExec(dst, "cat", shell)
+    val attemptDir = dst.resolve("_distexec_tmp_t/0-1")
+    def errInode() = Files.getAttribute(attemptDir.resolve("err"), "unix:ino")
+    try {
+      assert(exec.executeOne(fileEntry(src, "a.txt")).ok)
+      val ino = errInode()
+      assert(exec.executeOne(fileEntry(src, "b.txt")).ok)
+      assert(errInode() == ino, "the empty stderr tmp is truncated, not made again")
+      assert(Files.readString(dst.resolve("b.txt")) == "bravo\n")
+      exec.close()
+      assert(!Files.exists(attemptDir), walk(dst))
     } finally shell.close()
   }
 

@@ -2,7 +2,9 @@ package org.apache.spark
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 
 /** Test access to the listener bus, which is `private[spark]`. */
 object ListenerBusAccess {
@@ -12,22 +14,41 @@ object ListenerBusAccess {
 
   /** The Spark jobs `body` starts, counted in a job group of their own. */
   def jobCount(sc: SparkContext)(body: => Unit): Int = {
-    val group = s"job-count-${java.util.UUID.randomUUID}"
     val jobs = new AtomicInteger
-    val listener = new SparkListener {
+    inGroup(sc)(group => new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group)
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job count")
+        if (in(group, e.properties)) jobs.incrementAndGet()
+    })(body)
+    jobs.get
+  }
+
+  /** The task count of each stage `body` submits, in submission order. */
+  def stageTasks(sc: SparkContext)(body: => Unit): Seq[Int] = {
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    inGroup(sc)(group => new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        if (in(group, e.properties)) tasks.add(e.stageInfo.numTasks)
+    })(body)
+    tasks.asScala.toSeq
+  }
+
+  private def in(group: String, props: java.util.Properties): Boolean =
+    props != null && props.getProperty("spark.jobGroup.id") == group
+
+  /** Run `body` in a job group of its own, with the listener made for
+    * that group added.
+    */
+  private def inGroup(sc: SparkContext)(listener: String => SparkListener)(body: => Unit): Unit = {
+    val group = s"listener-access-${java.util.UUID.randomUUID}"
+    val l = listener(group)
+    sc.addSparkListener(l)
+    sc.setJobGroup(group, "listener access")
     try {
       body
       drain(sc)
     } finally {
       sc.clearJobGroup()
-      sc.removeSparkListener(listener)
+      sc.removeSparkListener(l)
     }
-    jobs.get
   }
 }
